@@ -123,6 +123,11 @@ DRIVER_WINDOW = 50
 #: 50/50 green) and were cleared. r17 is an optimization round: no query's
 #: declared semantics change, so nothing is forced — the window is pure
 #: oldest-green rotation (r10/r11/r12 rows).
+#:
+#: r18: the r17 window landed 50/50 green (CORRECTNESS_r17.json). Since
+#: r17 nothing has changed query semantics (only perfbench/, BENCHMARK.json
+#: and documents were added), so nothing is forced — the window is pure
+#: oldest-green rotation (r12/r13/r14 rows).
 FORCE_VERIFY: tuple[str, ...] = ()
 
 
