@@ -16,14 +16,13 @@ identical plans, same session, 2.5s vs 49s; BENCH_r08's committed reading
 was ~18% uniform host noise), and steady-state is the number that
 transfers to a real cluster. Run-to-run plan and data are identical, so
 min-of-3 measures the engine, not the neighbor's workload. For that to
-hold, staging-table memoization is DISABLED (``spark.meos.staging.memo=
-false``) and every query starts from the canonical session confs
+hold, every query starts from the canonical session confs
 (``tools.probekit.reset_confs`` — the same helper the contest probes use
 per leg, so a crashed probe can never leak confs into a bench number;
-r8 VERDICT item 3): with the memo on, a repeat run of a staging-backed
-query (dedup_minhash_lsh, dedup_semantic) would skip the producing stages
-and the parquet write entirely, and the reported min would understate the
-query's real cost (r5 ADVICE, high). Every timed run does full work.
+r8 VERDICT item 3), and every timed run does full work: ``stage()``
+rewrites its staging table on each call, so a repeat run of a
+staging-backed query (dedup_minhash_lsh) pays the producing stages and
+the parquet write again.
 
 Since r11 the harness GATES on its own noise floor instead of only
 describing it (r10 VERDICT item 3 — two of the last three committed

@@ -11,14 +11,15 @@ a result (one small id per vector) that is a pure per-row function of
 (vector, quantizer).
 
 A quantizer is K rows — constant-sized, not data-sized — so it belongs in a
-side channel, not a join. Here it rides the staging machinery
-(functions/staging.py): ``stage()`` the K centroid rows once (a tiny
-parquet every executor can read), then assign map-side in an Arrow-batched
-pandas_udf that loads the side table ONCE per Python worker (process-level
-cache, refreshed on file fingerprint change) and scans each Arrow batch
-against it. The corpus path becomes scan → ArrowEvalPython → downstream:
-ZERO exchanges for assignment at any scale, and K× less data through the
-Python boundary than the crossJoin shape pushed through the shuffle.
+side channel, not a join. The queries derive it worker-side from the source
+parquet (``source_cents_spec``/``source_pq_cb_spec``, below); a parquet dir
+path (e.g. a ``stage()``d table) is accepted too. Assignment runs map-side
+in an Arrow-batched pandas_udf that loads the side table ONCE per Python
+worker (process-level cache, refreshed on file fingerprint change) and
+scans each Arrow batch against it. The corpus path becomes scan →
+ArrowEvalPython → downstream: ZERO exchanges for assignment at any scale,
+and K× less data through the Python boundary than the crossJoin shape
+pushed through the shuffle.
 
 Determinism contract (the oracles are unchanged):
 
@@ -68,10 +69,8 @@ from pyspark.sql.types import (
 
 from meos_rs_spark.functions.embeddings import _seq_dot, _stack
 
-# the dir change detector lives with the staging machinery (one shared
-# implementation — the memo digest and the side-table cache below must
-# agree on what counts as a content change); callers take side_table_name
-# from functions.staging directly
+# the dir change detector lives with the staging machinery; callers take
+# side_table_name from functions.staging directly
 from meos_rs_spark.functions.staging import dir_fingerprint
 
 #: (path, file fingerprint) -> pandas side table. Entries are K-row

@@ -9,23 +9,9 @@ recomputation of the producing stage — per consumer.
 
 ``stage()`` writes the intermediate once to a parquet staging table and hands
 every consumer a plain scan of it: columnar-compressed, spill-free,
-predictable. Re-staging the SAME plan under the same name within one session
-is a no-op read (the memo below), so repeated invocations of one query fn —
-e.g. the driver's two-leg compare — pay the write once, not per call.
-
-Memoization guardrails (r5 ADVICE):
-
-* ``spark.meos.staging.memo=false`` disables the memo entirely — every
-  ``stage()`` does the full write. ``bench.py`` sets this so its min-of-2
-  timing protocol measures two FULL executions, not one full run and one
-  memo-hit that skips the producing stages.
-* The memo only engages when every input file of the staged plan lives
-  under a trusted immutable root — the fixture dirs (default
-  ``/root/testdata``, override with ``spark.meos.staging.memoRoots``,
-  comma-separated) or this session's own staged tables. A plan scanning a
-  mutable scratch dir (e.g. the sources/sinks queries' per-invocation
-  ``_scratch`` rewrites) would otherwise memo-hit on stale data with an
-  identical plan text.
+predictable. Every call writes, so a repeated invocation of one query fn
+does the same full work as the first (see ``stage()`` for how long a
+returned scan stays readable).
 
 On a cluster the staging root points at the job's scratch prefix (HDFS/S3);
 locally it defaults to the system temp dir. Set ``spark.meos.staging.dir``
@@ -40,7 +26,6 @@ from __future__ import annotations
 import atexit
 import hashlib
 import os
-import re
 import shutil
 import tempfile
 import time
@@ -50,20 +35,16 @@ from pyspark.sql import DataFrame
 _STALE_AFTER_S = 24 * 3600
 _LIVE_MARKER = ".live"
 _CLEANUP_REGISTERED: set[str] = set()
-#: (applicationId, table name) -> (canonical plan digest, parquet path).
-#: A hit means the exact same logical plan was already materialized under
-#: this name by this session — return a scan instead of rewriting.
-_MEMO: dict[tuple[str, str], tuple[str, str]] = {}
 
 
 def _touch_live(app_dir: str) -> None:
     """Refresh this session's liveness marker (mtime + owning PID).
 
-    Called on every ``stage()`` — writes AND memoized reads. The marker
-    carries the owner's PID so pruning can check REAL liveness: a session
-    that staged its tables early and then only reads them through
-    already-returned DataFrame scans never calls ``stage()`` again, so its
-    marker mtime alone would go stale while the session is still alive.
+    Called on every ``stage()``. The marker carries the owner's PID so
+    pruning can check REAL liveness: a session that staged its tables early
+    and then only reads them through already-returned DataFrame scans never
+    calls ``stage()`` again, so its marker mtime alone would go stale while
+    the session is still alive.
     """
     try:
         marker = os.path.join(app_dir, _LIVE_MARKER)
@@ -128,103 +109,6 @@ def _is_local_root(root: str) -> bool:
     return "://" not in root or root.startswith("file:")
 
 
-def _plan_digest(df: DataFrame) -> str | None:
-    """Canonical digest of the analyzed logical plan PLUS its input files.
-
-    Expression IDs (``#123``) are allocated from a global counter, so two
-    invocations of the same query fn produce textually different but
-    semantically identical plans. Deleting the digits would collide plans
-    that differ only in exprId CROSS-REFERENCES (``x#1 = x#2`` in a
-    self-join vs a different pairing), so instead each distinct id is
-    renumbered in first-occurrence order — a stable relabeling that
-    preserves reference structure.
-
-    The plan text alone is NOT enough: ``LogicalRelation.toString`` renders
-    a parquet scan as ``Relation [cols] parquet`` with no path, so the same
-    query over two different fixture dirs (the parity gate runs sf0.001 and
-    sf0.01 in one session) produces identical plan text — a memo hit there
-    would serve the other scale's staged table as this one's result. The
-    sorted input-file list is therefore mixed into the digest. In-memory
-    relations (``LocalRelation``/``LogicalRDD`` — ``createDataFrame`` data,
-    RDD-backed frames) carry their ROWS outside the plan text AND outside
-    the file list, so two different literal datasets would still digest
-    identically; any plan containing one disables memoization outright
-    (``spark.range`` is fine — its Range node is fully described by the
-    text). Plan + input equality then implies result equality for immutable
-    inputs (enforced by the trusted-roots check in ``stage()``). Returns
-    None when the JVM plan or file listing is unreachable (e.g. Spark
-    Connect), which disables memoization and falls back to always-write.
-    """
-    try:
-        analyzed = df._jdf.queryExecution().analyzed()
-        # Spark's own canonicalized form: exprIds normalized structurally
-        # (references preserved) while string literals stay VERBATIM — the
-        # text relabeler it replaces rewrote '#<digits>' inside literal
-        # values too, so plans differing only in a literal like 'a#100' vs
-        # 'a#200' digested identically and the memo served the wrong
-        # staged table (review find, r7; reproduced live). The homegrown
-        # _canon_plan remains only as the fallback when the JVM lazy val
-        # is unreachable.
-        try:
-            plan = analyzed.canonicalized().toString()
-        except Exception:
-            plan = _canon_plan(analyzed.toString())
-        files = "\0".join(sorted(df.inputFiles()))
-    except Exception:
-        return None
-    if "LocalRelation" in plan or "LogicalRDD" in plan:
-        return None
-    # canonicalized() normalizes output alias NAMES away, so two stage()
-    # calls under one table name differing only in column aliases would
-    # digest identically and the memo would serve the first build's parquet
-    # with stale column names (r7 ADVICE item 2) — mix the output schema in
-    schema = df.schema.simpleString()
-    return hashlib.sha256(
-        (plan + "\1" + files + "\2" + schema).encode()
-    ).hexdigest()
-
-
-def _canon_plan(plan: str) -> str:
-    """Relabel exprIds in first-occurrence order (see ``_plan_digest``).
-
-    Keyed on the NUMERIC id, not the matched text, so ``#0`` and ``#00``
-    relabel identically — Spark never emits leading zeros, but numeric
-    identity is what the relabeling means."""
-    ids: dict[int, str] = {}
-    return re.sub(
-        r"#(\d+)",
-        lambda m: ids.setdefault(int(m.group(1)), f"#{len(ids)}"),
-        plan,
-    )
-
-
-def _memo_trusted(df: DataFrame, app_dir: str) -> bool:
-    """Memoization is sound only over immutable inputs: every input file
-    must live under a trusted root — the read-only fixture dirs or this
-    session's own staged tables (whose content is keyed by their producing
-    plan's digest). Unknown inputs (or an unreachable file listing) fall
-    back to always-write."""
-    spark = df.sparkSession
-    try:
-        roots = spark.conf.get("spark.meos.staging.memoRoots")
-    except Exception:
-        roots = None
-    trusted = [r for r in (roots or "/root/testdata").split(",") if r]
-    trusted.append(app_dir)
-    trusted = [os.path.abspath(r) + os.sep for r in trusted]
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return False
-    for f in files:
-        local = re.sub(r"^file:/{0,2}(?=/)", "", f)
-        if "://" in local:
-            return False  # remote input — immutability unknowable here
-        if not os.path.abspath(local).startswith(tuple(trusted)):
-            return False
-    return True
-
-
 def fan_out(df: DataFrame, *keys: str, force: bool = False) -> DataFrame:
     """Spread an under-split scan across the session's parallelism.
 
@@ -267,7 +151,7 @@ def fan_out(df: DataFrame, *keys: str, force: bool = False) -> DataFrame:
     try:
         # .rdd / sparkContext raise under Spark Connect; the unforced probe
         # is a local-mode fixture mitigation only, so degrade to a no-op
-        # there (matching _plan_digest's Connect fallback — r7 ADVICE 3)
+        # there (r7 ADVICE 3)
         par = spark.sparkContext.defaultParallelism
         n = df.rdd.getNumPartitions()
     except Exception:
@@ -294,8 +178,7 @@ def dir_fingerprint(path: str):
     payload change always touches a data file and metadata-only touches
     must not read as content changes. Local paths only; None on unreadable
     dirs (URI-rooted staging relies on sf-keyed names for freshness).
-    Shared by the executor-side side-table cache (functions/quantize) and
-    the memo digest below — the two sensitivities must never diverge."""
+    Used by the executor-side side-table caches (functions/quantize)."""
     try:
         return tuple(
             (f, st.st_size, st.st_mtime_ns)
@@ -305,25 +188,6 @@ def dir_fingerprint(path: str):
         )
     except OSError:
         return None
-
-
-def _side_inputs_fingerprint(paths) -> str | None:
-    """Content fingerprint for Python-UDF side inputs (ADVICE r6): a staged
-    plan whose Arrow kernel reads a side table (e.g. the nearest-centroid
-    UDF's quantizer dir) carries that dependency in neither the plan text
-    nor ``df.inputFiles()``, so the caller must declare it and its state
-    must be mixed into the memo digest. Local dirs only — returns None
-    (memo off) for URI paths or unreadable dirs."""
-    parts = []
-    for p in sorted(paths):
-        if "://" in p and not p.startswith("file:"):
-            return None
-        ap = os.path.abspath(re.sub(r"^file:/{0,2}(?=/)", "", p))
-        fp = dir_fingerprint(ap)
-        if fp is None:
-            return None
-        parts.append((ap, fp))
-    return repr(parts)
 
 
 def adopt_app_dir(app_dir: str, root: str) -> None:
@@ -358,22 +222,20 @@ def staged_table_path(spark, name: str) -> str:
     return os.path.join(root, spark.sparkContext.applicationId, name)
 
 
-def stage(df: DataFrame, name: str, side_inputs: tuple[str, ...] = ()) -> DataFrame:
+def stage(df: DataFrame, name: str) -> DataFrame:
     """Materialize ``df`` under the staging root and return a scan of it.
 
-    ``mode("overwrite")`` keeps repeated invocations (bench reruns, the
-    driver's two-leg compare) idempotent; the write is eager, so the
-    producing stages run exactly once no matter how many consumers fan out
-    downstream (the property ``.cache()`` only guarantees while the blocks
-    survive eviction). Within one session, re-staging an identical plan
-    under the same name skips the write entirely and returns the existing
-    table's scan — unless ``spark.meos.staging.memo=false`` or the plan
-    reads outside the trusted immutable roots (module docstring).
+    Every call writes: ``mode("overwrite")`` to the session's path for
+    ``name`` (``staged_table_path``), then a fresh scan of what was written.
+    The write is eager, so the producing stages run exactly once no matter
+    how many consumers fan out downstream (the property ``.cache()`` only
+    guarantees while the blocks survive eviction).
 
-    ``side_inputs``: paths any Python-UDF kernel in ``df``'s plan reads
-    outside Spark's knowledge (staged quantizer dirs). Their content
-    fingerprint joins the memo digest, so a changed side table re-stages
-    even though the plan text and input-file list are unchanged.
+    Contract: the returned DataFrame stays readable until the next
+    ``stage()`` under the same ``name`` in this session — that call
+    overwrites the part-files the earlier scan resolved. Tables built from
+    a fixture dir therefore take a ``side_table_name`` (keyed by that dir),
+    and one query build stages each name once.
     """
     spark = df.sparkSession
     path = staged_table_path(spark, name)
@@ -387,34 +249,9 @@ def stage(df: DataFrame, name: str, side_inputs: tuple[str, ...] = ()) -> DataFr
         os.makedirs(app_dir, exist_ok=True)
         _register_cleanup(app_dir, root)
         _touch_live(app_dir)
-    key = (spark.sparkContext.applicationId, name)
-    try:
-        memo_on = spark.conf.get("spark.meos.staging.memo", "true") != "false"
-    except Exception:
-        memo_on = True
-    digest = _plan_digest(df) if memo_on else None
-    if digest is not None and side_inputs:
-        sfp = _side_inputs_fingerprint(side_inputs)
-        digest = (
-            None
-            if sfp is None
-            else hashlib.sha256((digest + "\2" + sfp).encode()).hexdigest()
-        )
-    if (
-        digest is not None
-        and _MEMO.get(key) == (digest, path)
-        and os.path.isdir(path)
-    ):
-        return spark.read.parquet(path)
-    if digest is not None and not _memo_trusted(df, app_dir):
-        digest = None
     # zstd over the default snappy: measured on the heaviest staged table
     # (the minhash signature with its shingle-set arrays) it writes as fast
     # or faster AND ~30% smaller — at 100 TB the staged intermediate's
     # scratch IO (write once, read per consumer) is the cost that matters
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
-    if digest is not None:
-        _MEMO[key] = (digest, path)
-    else:
-        _MEMO.pop(key, None)
     return spark.read.parquet(path)

@@ -28,6 +28,7 @@ from meos_rs_spark.functions.boxes import (
     tbox_same,
     tbox_union,
 )
+from meos_rs_spark.functions.staging import fan_out
 from meos_rs_spark.functions.trajectory import POSITS_XY_CTE, posits_xy
 from meos_rs_spark.registry import register
 from meos_rs_spark.sources.tables import load_table
@@ -340,10 +341,7 @@ def box_stbox_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # then runs on ONE task (observed live at ×10: a 1G-candidate probe
     # single-threaded). A user-specified partition count is exempt from
     # AQE coalescing; the extra exchange moves one summary row per vessel.
-    try:
-        vbox = vbox.repartition(spark.sparkContext.defaultParallelism, "mmsi")
-    except Exception:
-        pass  # Spark Connect: no sparkContext; driver-default AQE applies
+    vbox = fan_out(vbox, "mmsi", force=True)
     cw, ch, x0, y0 = _adaptive_cell_stats(vbox)
     # Cell bounds computed OUTSIDE the higher-order function: subquery
     # expressions (the adaptive cw/ch) are not allowed inside lambdas.
@@ -414,18 +412,8 @@ def box_stbox_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AQE-coalesce-exempt and satisfies the join's clustered distribution
     # (no second exchange); at real scale these exchanges exceed the
     # advisory size and spread on their own.
-    # AttributeError ONLY (r10 ADVICE): Spark Connect's missing
-    # sparkContext raises PySparkAttributeError (an AttributeError
-    # subclass); anything else — e.g. a refactor breaking the
-    # co-partitioning call itself — must surface, not silently lose the
-    # serialization fix this block exists for.
-    try:
-        par = spark.sparkContext.defaultParallelism
-    except AttributeError:
-        pass  # Spark Connect: no sparkContext; driver-default AQE applies
-    else:
-        a = a.repartition(par, "cx_a", "cy_a", "ca", "cb")
-        b = b.repartition(par, "cx_b", "cy_b", "ca", "cb")
+    a = fan_out(a, "cx_a", "cy_a", "ca", "cb", force=True)
+    b = fan_out(b, "cx_b", "cy_b", "ca", "cb", force=True)
     pairs = (
         a.join(
             b,
@@ -525,12 +513,7 @@ def box_stbox_overlap_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # explicit-count repartition before the explodes — same AQE-coalesce-
     # before-Generate hazard as the parent (aqe-coalesce trap, r8)
-    try:
-        vbox = vbox.repartition(
-            spark.sparkContext.defaultParallelism, "mmsi", "d"
-        )
-    except Exception:
-        pass  # Spark Connect: no sparkContext; driver-default AQE applies
+    vbox = fan_out(vbox, "mmsi", "d", force=True)
     # adaptive spatial cells, exactly the parent's policy (shared helper)
     cw, ch, x0, y0 = _adaptive_cell_stats(vbox)
     # spatial cell bounds anchored at the data min (ANSI-overflow guard,
@@ -623,12 +606,8 @@ def box_stbox_overlap_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # user-specified count is AQE-coalesce-exempt and satisfies the join's
     # clustered distribution, so no second exchange appears; at real scale
     # these exchanges exceed the advisory size and spread on their own.
-    try:
-        par = spark.sparkContext.defaultParallelism
-        a = a.repartition(par, "cellx", "celly", "cellt", "ca", "cb")
-        b = b.repartition(par, "cx_b", "cy_b", "ct_b", "ca", "cb")
-    except Exception:
-        pass  # Spark Connect: no sparkContext; driver-default AQE applies
+    a = fan_out(a, "cellx", "celly", "cellt", "ca", "cb", force=True)
+    b = fan_out(b, "cx_b", "cy_b", "ct_b", "ca", "cb", force=True)
     pairs = (
         a.join(
             b,

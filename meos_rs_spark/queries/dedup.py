@@ -188,10 +188,11 @@ def _staged_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-sized shuffles; the wrong trade at 100 TB where the global
     dictionary itself is huge.)
 
-    Shared by dedup_minhash_lsh / dedup_components / dedup_minhash_estimate
-    — within one session the staging memo makes the extra calls free, and
-    the estimate query no longer recomputes the signature from a second
-    corpus scan.
+    Shared by dedup_minhash_lsh (and through it dedup_components and
+    text_curation_pipeline) and dedup_minhash_estimate. Each build stages
+    the signature once (the estimate query joins against the same frame
+    instead of recomputing it from a second corpus scan); a later build in
+    the same session rewrites the table, per ``stage()``'s contract.
     """
     from meos_rs_spark.functions.staging import side_table_name, stage
 
@@ -228,10 +229,9 @@ def _lsh_scored(sig: DataFrame) -> DataFrame:
     """Band → bucket → candidate pairs → exact-Jaccard re-rank over the
     staged signature table. Split out so dedup_minhash_estimate can build
     from the SAME ``_staged_sig`` DataFrame it joins against: invoking
-    ``stage()`` twice for one query would, whenever the memo does not
-    engage (kill-switch, untrusted roots, digest unavailable), overwrite
-    the staged part-files the first invocation's scans already resolved —
-    FILE_NOT_EXIST at execution time."""
+    ``stage()`` twice for one query would overwrite the staged part-files
+    the first invocation's scans already resolved — FILE_NOT_EXIST at
+    execution time."""
     band_cols = [
         F.md5(F.concat_ws("|", *[f"h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)])).alias(f"band{b}")
         for b in range(N_BANDS)

@@ -148,6 +148,24 @@ def test_banded_overlap_degenerate_point_data_pre_epoch(spark, tmp_path):
     }
 
 
+def test_banded_overlap_surfaces_a_failing_repartition(spark, monkeypatch):
+    """The banded join's keyed repartitions are what keep AQE from
+    coalescing its refinement onto one task; a repartition that fails must
+    fail the build, not be swallowed into a plan without them."""
+    import pytest
+
+    from meos_rs_spark.queries.boxes import box_stbox_overlap_banded
+    from tests.conftest import SF_SMOKE
+
+    def broken(self, *args, **kwargs):
+        raise RuntimeError("repartition failed")
+
+    # the session's concrete DataFrame class (it overrides the base API's)
+    monkeypatch.setattr(type(spark.range(1)), "repartition", broken)
+    with pytest.raises(RuntimeError, match="repartition failed"):
+        box_stbox_overlap_banded(spark, SF_SMOKE)
+
+
 def test_salt_chunks_clamps_before_narrowing(spark):
     """The chunk-salt clamp must happen in LONG before the int cast: an
     extreme hottest-cell count would otherwise overflow the cast under

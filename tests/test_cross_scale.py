@@ -1,12 +1,11 @@
 """Alternating-scale session safety: one session running the same query at
 two fixture scales must produce each scale's correct answer.
 
-This is the end-to-end twin of
-test_staging.test_same_plan_different_fixture_dirs_do_not_collide — the r6
-regression where a path-free plan digest let the sf0.001 staged table be
-memo-served as the sf0.01 result — extended to the side-table quantizer
-queries, whose executor-side caches add a second way for stale state to
-leak across scales. The parity suite can't see this: it runs one scale per
+This is the end-to-end twin of the ``two_fixture_dirs`` case of
+test_staging.test_restage_rewrites_and_serves_the_new_rows (the r6
+regression served the sf0.001 staged table as the sf0.01 result),
+extended to the side-table quantizer queries, whose executor-side caches
+add a second way for stale state to leak across scales. The parity suite can't see this: it runs one scale per
 session."""
 
 from __future__ import annotations
@@ -18,7 +17,7 @@ from tests.conftest import SF_ORACLE, SF_SMOKE
 from tests.oracle import compare, duck_connection
 
 # every staging- or side-table-backed query family: minhash (staged
-# signature), SemDeDup + kmeans + IVF + PQ (staged quantizer side tables +
+# signature), SemDeDup + kmeans + IVF + PQ (source-derived quantizers in
 # worker caches), pagerank (staged edges)
 QUERIES = [
     "dedup_minhash_lsh",

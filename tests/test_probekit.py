@@ -7,7 +7,6 @@ driver's per-round BENCH artifact."""
 from __future__ import annotations
 
 from tools.probekit import (
-    CANONICAL_CONFS,
     CONTEST_CONFS,
     WARM_DIR,
     load1,
@@ -42,11 +41,9 @@ def test_timed_count_defaults_to_min_of_three():
 
 def test_reset_confs_returns_the_session_to_canonical(spark):
     """Conf hygiene by construction (the r8 salt-contest drift class): after
-    a leg sets any contest conf, reset_confs must erase it and re-apply the
-    canonical overrides."""
+    a leg sets any contest conf, reset_confs must erase it."""
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    spark.conf.set("spark.meos.staging.memo", "true")
     reset_confs(spark)
     # contest confs are back to engine defaults (unset → default values)
     assert (
@@ -57,11 +54,6 @@ def test_reset_confs_returns_the_session_to_canonical(spark):
         spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
         == "true"
     )
-    # canonical overrides re-applied
-    for k, v in CANONICAL_CONFS.items():
-        assert spark.conf.get(k) == v
-    # restore the test-session default (conftest expects the memo on)
-    spark.conf.set("spark.meos.staging.memo", "true")
 
 
 def test_contest_conf_list_covers_the_salt_contest_legs():

@@ -152,36 +152,6 @@ def test_trip_merge_idempotent_and_normalize_stable(a):
     assert ts == sorted(set(ts))
 
 
-# --- staging-canonicalization properties (the memo digest's foundations) ----
-
-from hypothesis import given as _given  # noqa: E402
-from meos_rs_spark.functions.staging import _canon_plan  # noqa: E402
-
-_plan_text = st.text(
-    alphabet=st.sampled_from(list("abcx#0123456789 =(),\n")), max_size=120
-)
-
-
-@_given(_plan_text)
-@settings(max_examples=200, deadline=None)
-def test_canon_plan_idempotent(plan):
-    """Relabeling already-relabeled text must be a fixed point — otherwise
-    two digests of the same plan could differ across calls."""
-    once = _canon_plan(plan)
-    assert _canon_plan(once) == once
-
-
-@_given(_plan_text, st.integers(min_value=1, max_value=7))
-@settings(max_examples=200, deadline=None)
-def test_canon_plan_invariant_under_uniform_exprid_shift(plan, shift):
-    """Shifting every exprId by a constant (fresh-allocation simulation)
-    must canonicalize identically — the digest's core soundness claim."""
-    import re
-
-    shifted = re.sub(r"#(\d+)", lambda m: f"#{int(m.group(1)) + shift}", plan)
-    assert _canon_plan(plan) == _canon_plan(shifted)
-
-
 # --- resample grid-ceiling alignment (r15) ---------------------------------
 
 _TS_US = st.integers(
@@ -190,7 +160,7 @@ _TS_US = st.integers(
 )
 
 
-@_given(_TS_US)
+@given(_TS_US)
 @settings(max_examples=500, deadline=None)
 def test_resample_ceiling_formulas_are_exact_and_engine_identical(p):
     """r15: traj_resample_linear's first-marker alignment must be TRUE

@@ -195,16 +195,12 @@ def test_side_cache_refreshes_on_overwrite(spark):
     path = _write_cents(spark, [(0, v1)], "q_cache_probe")
     df = quantize._load_side(path)
     assert df["cent_id"].tolist() == [0]
-    # overwrite with different content under the same path (memo disabled so
-    # the write actually happens) — the fingerprint must invalidate the cache
-    spark.conf.set("spark.meos.staging.memo", "false")
-    try:
-        stage(
-            spark.createDataFrame([(7, v2)], "cent_id long, ce array<float>"),
-            "q_cache_probe",
-        )
-    finally:
-        spark.conf.set("spark.meos.staging.memo", "true")
+    # overwrite with different content under the same path — the
+    # fingerprint must invalidate the cache
+    stage(
+        spark.createDataFrame([(7, v2)], "cent_id long, ce array<float>"),
+        "q_cache_probe",
+    )
     df2 = quantize._load_side(path)
     assert df2["cent_id"].tolist() == [7]
 

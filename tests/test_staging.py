@@ -1,155 +1,85 @@
-"""Staging-table lifecycle: within-session plan memoization, liveness
-markers, and stale-sibling pruning (ADVICE r4: mtime-based pruning could
-delete a >24h-old but still-live session's tables)."""
+"""Staging-table lifecycle: every stage() rewrites, liveness markers, and
+stale-sibling pruning (ADVICE r4: mtime-based pruning could delete a
+>24h-old but still-live session's tables)."""
 
 from __future__ import annotations
 
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from meos_rs_spark.functions import staging
 
 
-def _part_files(path: str) -> dict[str, float]:
-    return {
-        f: os.path.getmtime(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    }
+def _part_files(path: str) -> set[str]:
+    return {f for f in os.listdir(path) if f.endswith(".parquet")}
 
 
-def test_same_plan_same_name_skips_rewrite(spark):
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    out1 = staging.stage(df, "memo_probe")
-    key = (spark.sparkContext.applicationId, "memo_probe")
-    path = staging._MEMO[key][1]
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _parquet(spark, path: str, v: str):
+    spark.range(10).withColumn("v", F.lit(v)).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+#: case -> (first build, second build), each ``(spark, tmp_path) -> DataFrame``;
+#: the second build is staged under the same name as the first
+_RESTAGE_CASES = {
+    "identical_plan": (
+        lambda s, t: s.range(64).withColumn("v", F.col("id") + 1),
+        lambda s, t: s.range(64).withColumn("v", F.col("id") + 1),
+    ),
+    "changed_plan": (lambda s, t: s.range(10), lambda s, t: s.range(20)),
+    # one source dir, rewritten in place between the two stages
+    "rewritten_source": (
+        lambda s, t: _parquet(s, str(t / "src"), "old"),
+        lambda s, t: _parquet(s, str(t / "src"), "new"),
+    ),
+    # identical plan text over two fixture dirs: a parquet scan renders as
+    # ``Relation [cols] parquet`` with no path
+    "two_fixture_dirs": (
+        lambda s, t: _parquet(s, str(t / "sfA"), "A"),
+        lambda s, t: _parquet(s, str(t / "sfB"), "B"),
+    ),
+    # in-memory rows live in neither the plan text nor the input-file list
+    "in_memory_rows": (
+        lambda s, t: s.createDataFrame([(1, "one")], "id long, v string"),
+        lambda s, t: s.createDataFrame([(2, "two")], "id long, v string"),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RESTAGE_CASES))
+def test_restage_rewrites_and_serves_the_new_rows(spark, tmp_path, case):
+    """Every stage() writes fresh part-files and scans back exactly the rows
+    of the frame just staged, whatever the name held before — the cases are
+    the ways a reused staged table would serve stale rows."""
+    first, second = _RESTAGE_CASES[case]
+    name = f"restage_{case}"
+    path = staging.staged_table_path(spark, name)
+    df1 = first(spark, tmp_path)
+    assert _rows(staging.stage(df1, name)) == _rows(df1)
     before = _part_files(path)
-    # a structurally identical plan (fresh exprIds) must memo-hit: no rewrite
-    df2 = spark.range(100).withColumn("v", F.col("id") * 2)
-    out2 = staging.stage(df2, "memo_probe")
-    assert _part_files(path) == before
-    assert sorted(r.v for r in out2.collect()) == sorted(r.v for r in out1.collect())
-
-
-def test_changed_plan_same_name_rewrites(spark):
-    staging.stage(spark.range(10), "rewrite_probe")
-    out = staging.stage(spark.range(20), "rewrite_probe")
-    assert out.count() == 20
-
-
-def test_memo_kill_switch_forces_full_rewrite(spark):
-    """spark.meos.staging.memo=false (what bench.py sets) must make every
-    stage() of an identical plan repeat the parquet write — r5 ADVICE high:
-    with the memo on, bench's min-of-2 timed a memo-hit as the second run."""
-    df = spark.range(64).withColumn("v", F.col("id") + 1)
-    staging.stage(df, "killswitch_probe")
-    key = (spark.sparkContext.applicationId, "killswitch_probe")
-    path = staging._MEMO[key][1]
-    before = _part_files(path)
-    spark.conf.set("spark.meos.staging.memo", "false")
-    try:
-        time.sleep(0.05)  # ensure a rewrite produces observable mtimes
-        staging.stage(spark.range(64).withColumn("v", F.col("id") + 1), "killswitch_probe")
-        after = _part_files(path)
-        assert after != before  # rewritten, not memo-served
-        assert key not in staging._MEMO  # and the memo entry is dropped
-    finally:
-        spark.conf.set("spark.meos.staging.memo", "true")
-
-
-def test_untrusted_input_paths_disable_memo(spark, tmp_path):
-    """A plan scanning a mutable (non-fixture) dir must never memo-hit:
-    identical plan text over rewritten source data would serve stale rows
-    (r5 ADVICE low on the immutability assumption)."""
-    src = str(tmp_path / "mutable_src")
-    spark.range(10).withColumn("v", F.lit("old")).write.parquet(src)
-    out1 = staging.stage(spark.read.parquet(src), "mutable_probe")
-    assert {r.v for r in out1.select("v").distinct().collect()} == {"old"}
-    # rewrite the source in place — plan text for a re-read is identical
-    spark.range(10).withColumn("v", F.lit("new")).write.mode("overwrite").parquet(src)
-    out2 = staging.stage(spark.read.parquet(src), "mutable_probe")
-    assert {r.v for r in out2.select("v").distinct().collect()} == {"new"}
-
-
-def test_same_plan_different_fixture_dirs_do_not_collide(spark, tmp_path):
-    """Two immutable source dirs with identical contentless plan text
-    (``Relation [cols] parquet`` carries NO path) must not share a memo
-    entry: the digest mixes in the input-file list. Found live in r6 — a
-    session running one query at sf0.001 then sf0.01 memo-served the
-    sf0.001 staged table as the sf0.01 result."""
-    d1, d2 = str(tmp_path / "sfA"), str(tmp_path / "sfB")
-    spark.range(10).withColumn("v", F.lit("A")).write.parquet(d1)
-    spark.range(10).withColumn("v", F.lit("B")).write.parquet(d2)
-    # both dirs must count as trusted-immutable for the memo to even engage
-    spark.conf.set("spark.meos.staging.memoRoots", f"{d1},{d2}")
-    try:
-        out1 = staging.stage(spark.read.parquet(d1), "scale_probe")
-        assert {r.v for r in out1.select("v").distinct().collect()} == {"A"}
-        out2 = staging.stage(spark.read.parquet(d2), "scale_probe")
-        assert {r.v for r in out2.select("v").distinct().collect()} == {"B"}
-    finally:
-        spark.conf.unset("spark.meos.staging.memoRoots")
-
-
-def test_in_memory_relations_never_memo(spark):
-    """createDataFrame data lives in a LocalRelation/LogicalRDD whose ROWS
-    appear neither in the plan text nor in inputFiles — two different
-    literal datasets would digest identically, so such plans must disable
-    the memo outright (late-r6 review finding)."""
-    out1 = staging.stage(spark.createDataFrame([(1, "one")], "id long, v string"), "local_probe")
-    assert [r.v for r in out1.collect()] == ["one"]
-    out2 = staging.stage(spark.createDataFrame([(2, "two")], "id long, v string"), "local_probe")
-    assert [r.v for r in out2.collect()] == ["two"]
-
-
-def test_changed_side_input_breaks_memo(spark, tmp_path):
-    """A Python-UDF side table lives outside both the plan text and
-    inputFiles (ADVICE r6): when the caller declares it via side_inputs,
-    changing its content must force a re-stage even though the Spark plan
-    is textually identical — and unchanged side inputs must still memo-hit."""
-    side = tmp_path / "side_tab"
-    side.mkdir()
-    (side / "part-0").write_text("v1")
-    df = spark.range(50).withColumn("v", F.col("id") + 1)
-    staging.stage(df, "side_probe", side_inputs=(str(side),))
-    key = (spark.sparkContext.applicationId, "side_probe")
-    path = staging._MEMO[key][1]
-    before = _part_files(path)
-    # identical plan + identical side input: memo hit, no rewrite
-    staging.stage(
-        spark.range(50).withColumn("v", F.col("id") + 1),
-        "side_probe",
-        side_inputs=(str(side),),
-    )
-    assert _part_files(path) == before
-    # same plan, changed side-table content: must rewrite
-    time.sleep(0.01)  # ensure a distinct mtime_ns even on coarse clocks
-    (side / "part-0").write_text("v2-longer")
-    staging.stage(
-        spark.range(50).withColumn("v", F.col("id") + 1),
-        "side_probe",
-        side_inputs=(str(side),),
-    )
-    assert _part_files(path) != before
+    df2 = second(spark, tmp_path)
+    assert _rows(staging.stage(df2, name)) == _rows(df2)
+    assert before and _part_files(path).isdisjoint(before)
 
 
 def test_estimate_single_stage_per_build(spark):
     """dedup_minhash_estimate must stage its signature ONCE per build: a
-    second same-name stage() while the first build's scans are live would,
-    with the memo off (bench mode), overwrite the part-files those scans
-    already resolved — FILE_NOT_EXIST at collect (late-r6 review finding,
+    second same-name stage() while the first build's scans are live would
+    overwrite the part-files those scans already resolved — FILE_NOT_EXIST
+    at collect (late-r6 review finding,
     fixed by sharing one _staged_sig frame through _lsh_scored)."""
     from meos_rs_spark.registry import load_registry
     from tests.conftest import SF_SMOKE
 
-    spark.conf.set("spark.meos.staging.memo", "false")
-    try:
-        df = load_registry()["dedup_minhash_estimate"].fn(spark, SF_SMOKE)
-        assert df.count() > 0
-    finally:
-        spark.conf.set("spark.meos.staging.memo", "true")
+    df = load_registry()["dedup_minhash_estimate"].fn(spark, SF_SMOKE)
+    assert df.count() > 0
 
 
 def test_fan_out_force_skips_the_rdd_probe(spark):
@@ -157,8 +87,6 @@ def test_fan_out_force_skips_the_rdd_probe(spark):
     wrong question for group-exchange callers, and .rdd raises under Spark
     Connect — where the forced path used to silently no-op, returning the
     AQE-serial-Python hazard it exists to fix (r8 ADVICE item 1)."""
-    import pytest
-
     df = spark.range(100).withColumn("k", F.col("id") % 7)
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(
@@ -174,8 +102,6 @@ def test_fan_out_force_falls_back_to_shuffle_partitions_under_connect(spark):
     """With no sparkContext at all (Spark Connect), force=True must still
     land an explicit-count (AQE-coalesce-exempt) keyed exchange, sized by
     the session's shuffle-partition conf (r8 ADVICE item 1)."""
-    import pytest
-
     df = spark.range(100).withColumn("k", F.col("id") % 7)
     expected = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with pytest.MonkeyPatch.context() as mp:
@@ -188,15 +114,6 @@ def test_fan_out_force_falls_back_to_shuffle_partitions_under_connect(spark):
     assert out.rdd.getNumPartitions() == expected
 
 
-def test_canon_plan_preserves_exprid_cross_references():
-    """Stable relabeling, not deletion: 'x#1 = x#2' (join of two attrs) and
-    'x#1 = x#1' (self-comparison) must digest differently, while fresh
-    exprIds for the same structure must digest identically."""
-    assert staging._canon_plan("x#1 = x#2") != staging._canon_plan("x#7 = x#7")
-    assert staging._canon_plan("x#1 = x#2") == staging._canon_plan("x#8 = x#9")
-    assert staging._canon_plan("x#3 = x#3") == staging._canon_plan("x#5 = x#5")
-
-
 def test_is_local_root():
     assert staging._is_local_root("/tmp/meos_rs_staging")
     assert staging._is_local_root("file:///tmp/meos_rs_staging")
@@ -206,13 +123,12 @@ def test_is_local_root():
 
 def test_live_marker_exists_and_refreshes(spark):
     staging.stage(spark.range(5), "live_probe")
-    key = (spark.sparkContext.applicationId, "live_probe")
-    app_dir = os.path.dirname(staging._MEMO[key][1])
+    app_dir = os.path.dirname(staging.staged_table_path(spark, "live_probe"))
     marker = os.path.join(app_dir, staging._LIVE_MARKER)
     assert os.path.exists(marker)
     old = time.time() - 3600
     os.utime(marker, (old, old))
-    # every stage() call — memoized reads included — refreshes liveness
+    # every stage() call refreshes liveness
     staging.stage(spark.range(5), "live_probe")
     assert os.path.getmtime(marker) > old + 1800
 
@@ -263,43 +179,3 @@ def test_stale_sibling_pruning_respects_liveness(tmp_path):
     assert os.path.isdir(fresh)
     assert os.path.isdir(idle_live)
     assert os.path.isdir(me)
-
-
-def test_plan_digest_distinguishes_exprid_shaped_literals(spark):
-    """Regression for the r7 memo collision: two plans differing ONLY in a
-    string literal that happens to look like an exprId ('a#100' vs
-    'a#200') must digest differently — the old text relabeler rewrote
-    '#<digits>' inside literal values and the memo served the first
-    filter's staged rows for the second query."""
-    from meos_rs_spark.functions import staging
-    from tests.conftest import SF_SMOKE
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    import pyspark.sql.functions as F
-
-    d1 = staging._plan_digest(d.filter(F.col("lang") == "a#100"))
-    d2 = staging._plan_digest(d.filter(F.col("lang") == "a#200"))
-    assert d1 is not None and d2 is not None
-    assert d1 != d2
-    # and the original guarantee still holds: the same query built twice
-    # (fresh exprIds) digests identically
-    b1 = staging._plan_digest(d.filter(F.col("lang") == "x").groupBy("source").count())
-    b2 = staging._plan_digest(d.filter(F.col("lang") == "x").groupBy("source").count())
-    assert b1 == b2
-
-
-def test_plan_digest_distinguishes_output_alias_names(spark):
-    """Regression for r7 ADVICE item 2: canonicalized() normalizes output
-    alias NAMES away, so two plans differing only in column aliases used to
-    digest identically — the memo would serve the first build's parquet
-    with stale column names and downstream resolution would fail."""
-    from meos_rs_spark.functions import staging
-    from tests.conftest import SF_SMOKE
-
-    import pyspark.sql.functions as F
-
-    d = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    a1 = staging._plan_digest(d.select(F.length("text").alias("n_chars")))
-    a2 = staging._plan_digest(d.select(F.length("text").alias("text_len")))
-    assert a1 is not None and a2 is not None
-    assert a1 != a2

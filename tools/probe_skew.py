@@ -4,8 +4,8 @@ genuinely HOT key, not just more keys.
 ``gen_scale --skew`` concentrates ~22.5% of each fact table on one
 customer / supplier / vessel and plants ~900 identical copies of one doc
 template (see ``tools/gen_scale.py``); this runner then measures, in one
-sitting on the same session (min-of-3 since r9, staging memo off —
-bench.py's honest-timing protocol):
+sitting on the same session (min-of-3 since r9 — bench.py's
+honest-timing protocol):
 
 1. the skew-affected bench queries on the skewed ×10 fixture vs the
    uniform ×10 fixture (same row counts, so the ratio isolates the skew;

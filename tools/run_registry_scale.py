@@ -5,9 +5,9 @@ outside that set (the window-heavy SCD2/gap-islands family, the iterative
 EVERY registered query once at sf0.1 and once at the uniform ×10 fixture in
 one sitting and reports t(×10)/t(0.1) per query.
 
-Protocol: one driver-default session, staging memo off (every timing does
-full work), one warm-up pass per query at sf0.001 (codegen + Arrow workers
-hot, as bench.py), ONE timed run per scale (203 queries × 2 scales; the
+Protocol: one driver-default session (every timing does full work), one
+warm-up pass per query at sf0.001 (codegen + Arrow workers hot, as
+bench.py), ONE timed run per scale (203 queries × 2 scales; the
 verdict asks for wall-clock per query, not min-of-N) — then a confirm
 re-run at both scales for any query whose ratio exceeds the flag threshold,
 keeping the better (min) time, so a host-noise spike on a single run
