@@ -210,10 +210,7 @@ def staged_table_path(spark, name: str) -> str:
     is exactly what makes a staged K-row quantizer usable as a per-worker
     side file without shipping it through a join.
     """
-    try:
-        root = spark.conf.get("spark.meos.staging.dir")
-    except Exception:
-        root = None
+    root = spark.conf.get("spark.meos.staging.dir", None)
     if not root:
         root = os.path.join(tempfile.gettempdir(), "meos_rs_staging")
     # namespace by application id: two Spark sessions on one machine (a bench

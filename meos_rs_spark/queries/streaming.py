@@ -178,10 +178,9 @@ def _state_partitions(spark: SparkSession, sf_dir: str | None) -> str:
     exceeds the replayed backlog (or dwarfs the 200-partition clamp)
     should set it rather than rely on the backlog heuristic; with no
     size hint the floor applies."""
-    try:
-        return spark.conf.get(STREAM_STATE_PARTITIONS_CONF)
-    except Exception:
-        pass
+    explicit = spark.conf.get(STREAM_STATE_PARTITIONS_CONF, None)
+    if explicit is not None:
+        return explicit
     import math
 
     size = _backlog_bytes(spark, sf_dir) if sf_dir else 0
@@ -208,10 +207,7 @@ class _stream_confs:
         self._sf_dir = sf_dir
 
     def __enter__(self):
-        try:
-            self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-        except Exception:
-            self._old = None
+        self._old = self._spark.conf.get("spark.sql.shuffle.partitions", None)
         self._spark.conf.set(
             "spark.sql.shuffle.partitions",
             _state_partitions(self._spark, self._sf_dir),

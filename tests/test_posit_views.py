@@ -313,26 +313,3 @@ def test_kept_ids_string_total_by_property():
                 assert ok_null, (p, v)
 
     check()
-
-
-def test_salvage_tail_total_by_property():
-    """hypothesis: _salvage_tail never raises on arbitrary tail text and
-    only ever returns {} or a dict whose queries are all numeric — garbage
-    can't smuggle a poisoned round into the structural gate's window."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from bench import _salvage_tail
-
-    @settings(max_examples=300, deadline=None)
-    @given(st.text(max_size=400))
-    def check(tail):
-        got = _salvage_tail(tail)
-        assert isinstance(got, dict)
-        if got:
-            assert set(got) == {"queries", "sf"}
-            assert all(
-                isinstance(v, (int, float)) for v in got["queries"].values()
-            )
-
-    check()

@@ -281,201 +281,84 @@ def test_consumers_import_without_a_session():
     assert callable(tools.run_registry_scale.main)
 
 
-def test_bench_quiet_verdict_gates_on_steal_and_spread2():
-    """The r11 noise gate (r10 VERDICT item 3): a sitting is quiet iff
-    pre-sample AND sweep steal are <= 0.1% and every query's two best runs
-    land within 1.4x. None steal (off-Linux) must read as unmeasurable,
-    not loud; spread_max must NOT gate (the r9 gold-standard artifact
-    reads spread_max 1.705 on a 0.01%-steal box)."""
-    from bench import _is_quiet
-
-    base = {"pre_steal_pct": 0.0, "steal_pct": 0.05, "spread2_max": 1.1,
-            "spread_max": 1.705}  # r9-shaped: loud max/min, quiet two-best
-    assert _is_quiet(dict(base))
-    assert not _is_quiet(dict(base, steal_pct=0.11))
-    assert not _is_quiet(dict(base, pre_steal_pct=1.43))
-    assert not _is_quiet(dict(base, spread2_max=1.41))
-    assert _is_quiet(dict(base, pre_steal_pct=None, steal_pct=None))
-
-
-def test_bench_structural_gate_catches_the_r12_share_move():
-    """r12 VERDICT item 4: the noise block diagnosed sitting-level noise but
-    missed a single query's structural share move (the XY envelope tripled
-    traj_stbox_z_path's per-row cost and the 1.37x sweep inflation hid it).
-    structural_suspects compares each query's share-of-total against its
-    trailing-3-artifact median — retro-check: feeding the committed r12
-    timings must flag traj_stbox_z_path even with r12 itself polluting the
-    trailing window; the share floor must mute rounding-floor queries; an
-    off-scale run (no same-sf history) must degrade to no-op."""
-    import json
-    import os
-
-    from bench import _trailing_shares, structural_suspects
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "BENCH_r12.json"), encoding="utf-8") as fh:
-        r12 = json.load(fh)["parsed"]["queries"]
-    # pinned r10/r11 shares for traj_stbox_z_path (0.026/0.023) so the
-    # retro-check stays valid as future artifacts slide the real window
-    hist = {"traj_stbox_z_path": [0.0264, 0.0227]}
-    sus = structural_suspects(r12, 0.1, history=hist)
-    assert "traj_stbox_z_path" in sus
-    assert sus["traj_stbox_z_path"]["ratio"] > 1.5
-    # sub-floor timings never flag, whatever their ratio
-    tiny = {n: (0.001 if n == "traj_stbox_z_path" else t) for n, t in r12.items()}
-    assert "traj_stbox_z_path" not in structural_suspects(tiny, 0.1, history=hist)
-    # no same-sf history -> empty, not a crash (live artifact path)
-    assert structural_suspects(r12, 123.0) == {}
-    # the live reader only admits same-sf artifacts
-    assert _trailing_shares(repo, 123.0) == {}
-    assert "traj_stbox_z_path" in _trailing_shares(repo, 0.1)
-
-
-def test_bench_sweep_spread2_is_two_best_runs_ratio():
-    """spread2 excludes the cold first run by construction: min-of-3 with
-    one slow outlier stays quiet; uniform inflation does not."""
-    runs_cold_first = [0.424, 0.26, 0.286]  # r11-observed flagship shape
-    runs_jittery = [0.30, 0.26, 0.40]
-    two_best = lambda r: sorted(r)[1] / min(r)
-    assert two_best(runs_cold_first) < 1.4 < max(runs_cold_first) / min(runs_cold_first)
-    assert two_best(runs_jittery) < 1.4
-    assert two_best([0.26, 0.40, 0.42]) > 1.4
-
-
 def test_bench_final_line_fits_the_driver_tail_at_worst_case():
-    """r13 VERDICT item 1: the driver keeps only the LAST 2000 chars of
-    bench stdout and parses the final JSON line — BENCH_r13's line (runs +
-    4 sittings + suspects inline) crossed the window and head-truncated to
-    parsed:null. Pin: the final line rendered with 16 worst-width queries,
-    the max 4 sittings, and several suspects stays under 1900 chars and
-    round-trips through json.loads."""
+    """The driver keeps only the LAST 2000 chars of bench stdout and parses
+    the final JSON line (BENCH_r13's line once crossed that window and
+    head-truncated to parsed:null). Pin: the final line rendered with 16
+    worst-width queries stays under 1900 chars and round-trips through
+    json.loads."""
     import json
 
     from bench import BENCH_QUERIES, render_final_line
 
+    assert len(BENCH_QUERIES) == 16
     queries = {n: 9999.999 for n in BENCH_QUERIES}
-    sitting = {
-        "total": 99999.999,
-        "timings": queries,
-        "pre_steal_pct": 99.99,
-        "steal_pct": 99.99,
-        "spread_max": 99.999,
-        "spread2_max": 99.999,
-        "quiet": False,
-    }
-    suspects = {n: {"share": 0.1234, "median_share": 0.1234, "ratio": 9.999}
-                for n in list(BENCH_QUERIES)[:6]}
-    line = render_final_line(sitting, [dict(sitting)] * 4, 0.1, suspects)
+    result = {"total": 99999.999, "timings": queries, "steal_pct": 99.99}
+    line = render_final_line(result, 0.1)
     assert "\n" not in line
     assert len(line) < 1900, len(line)
     parsed = json.loads(line)
     assert parsed["metric"] == "headline_queries_wall_clock"
-    assert parsed["value"] == sitting["total"]
-    assert set(parsed["queries"]) == set(BENCH_QUERIES)
-    assert parsed["noise"]["sittings"] == 4
-    assert parsed["noise"]["structural_suspects"] == sorted(suspects)
+    assert parsed["value"] == result["total"]
+    assert parsed["unit"] == "sec"
+    assert parsed["queries"] == queries
+    assert parsed["sf"] == 0.1
+    assert parsed["noise"] == {"steal_pct": 99.99}
 
 
-def test_bench_structural_gate_renormalizes_over_the_intersection():
-    """r13 ADVICE item 4: shares are relative — one genuinely changed query
-    (or a BENCH_QUERIES membership change) shifts every other query's share
-    of total. With per-round history the gate renormalizes BOTH sides over
-    the common name set, so a single 3x mover no longer mass-flags its
-    innocent neighbors, and a name absent from history is skipped rather
-    than ratio-judged against a different denominator."""
-    from bench import structural_suspects
+def test_bench_sweep_resets_once_and_times_min_of_three(monkeypatch, capsys):
+    """Session-free check of the one bench sweep: per BENCH_QUERIES entry,
+    one reset_confs (one unset per contest conf) before three timed
+    builds+counts; queries[name] is the min of its three runs and the
+    headline value is their rounded sum."""
+    import types
 
-    # one 3x mover among 8 equal queries shifts the 7 neighbors' shares to
-    # ~0.8x their median — inside the band, so only the true mover flags
-    hist8 = [{n: 1 / 8 for n in "abcdefgh"}] * 3
-    now8 = {n: (3.0 if n == "a" else 1.0) for n in "abcdefgh"}
-    sus8 = structural_suspects(now8, 0.1, history=hist8)
-    assert set(sus8) == {"a"}
-    # membership change: current sitting dropped 'h' and added 'z'; with
-    # full-total normalization every survivor's share inflates vs history.
-    # Renormalized over the common 7, only the true mover flags, and 'z'
-    # (no history) is skipped, not flagged.
-    now_m = {n: (3.0 if n == "a" else 1.0) for n in "abcdefg"}
-    now_m["z"] = 5.0
-    sus_m = structural_suspects(now_m, 0.1, history=hist8)
-    assert set(sus_m) == {"a"}
-    # legacy aggregated-dict history keeps the old as-is behavior
-    agg = {"a": [1 / 8] * 3}
-    assert "a" in structural_suspects(now8, 0.1, history=agg)
-
-
-def test_bench_trailing_reader_salvages_a_decapitated_artifact():
-    """BENCH_r13.json is permanently parsed:null (the head-truncated final
-    line), but its tail keeps the queries dict and sf intact — the salvage
-    path must recover them so the structural gate's trailing window doesn't
-    silently lose the first all-envelope round (it would otherwise lean on
-    pre-envelope medians through ~r16)."""
-    import json
-    import os
-
-    from bench import _salvage_tail, _trailing_rounds
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "BENCH_r13.json"), encoding="utf-8") as fh:
-        art = json.load(fh)
-    assert art["parsed"] is None  # the r13 defect this guards
-    got = _salvage_tail(art["tail"])
-    assert got["sf"] == 0.1
-    assert got["queries"]["traj_assembly"] == 0.731
-    assert len(got["queries"]) == 16
-    # and the live reader actually ADMITS a salvaged artifact (not just
-    # parses it): in a dir where r13 is the only artifact it must fill the
-    # window. (The original assertion read the repo's own trailing window,
-    # which silently broke the round r13 rotated out of the last-3 slice —
-    # r16's artifact landing did exactly that.)
-    import shutil
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        shutil.copy(os.path.join(repo, "BENCH_r13.json"), d)
-        rounds = _trailing_rounds(d, 0.1)
-        assert len(rounds) == 1
-        assert abs(rounds[0]["traj_assembly"] - 0.731 / sum(got["queries"].values())) < 1e-9
-    # garbage tails degrade to {} (skipped), never a crash
-    assert _salvage_tail("") == {}
-    assert _salvage_tail('"queries": {"a": "oops"}, "sf": 0.1') == {}
-
-
-def test_bench_overtime_sittings_run_only_while_loud_and_in_budget():
-    """r14 VERDICT item 3: the r14 driver sitting was 0/4 quiet — overtime
-    sittings beyond max_sittings buy extra chances at a quiet reading, but
-    only while no quiet sitting exists and the wall-clock budget holds."""
     import bench
+    import tools.probekit as probekit
 
-    q = {"quiet": True, "wall_s": 90.0}
-    l = {"quiet": False, "wall_s": 90.0}
-    f = bench._should_run_sitting
-    # the base allocation always runs
-    assert f(0, [], 4, 6, 0.0, 900)
-    assert f(3, [l, l, l], 4, 6, 500.0, 900)
-    # overtime: runs while all-loud and inside budget…
-    assert f(4, [l, l, l, l], 4, 6, 600.0, 900)
-    assert f(5, [l, l, l, l, l], 4, 6, 800.0, 900)
-    # …but not once a quiet sitting exists, the cap is hit, or time is up
-    assert not f(4, [l, q, l, l], 4, 6, 100.0, 900)
-    assert not f(6, [l] * 6, 4, 6, 100.0, 900)
-    assert not f(4, [l, l, l, l], 4, 6, 901.0, 900)
-    # admission-with-headroom (r15 review find): a sitting costs a full
-    # sweep + retries, so elapsed alone must not admit at budget-epsilon —
-    # the worst completed sitting's wall time must still fit
-    slow = {"quiet": False, "wall_s": 200.0}
-    assert not f(4, [l, l, l, slow], 4, 6, 750.0, 900)  # 750+200 > 900
-    assert f(4, [l, l, l, slow], 4, 6, 650.0, 900)  # 650+200 <= 900
-    # sittings without wall_s (older records) degrade to elapsed-only
-    assert f(4, [{"quiet": False}] * 4, 4, 6, 899.0, 900)
-    # r15 ADVICE: the headroom base is the worst SWEEP-only time plus the
-    # FIXED retry ceiling — a prior sitting that happened to skip retries
-    # no longer understates the next sitting's worst case
-    swept = {"quiet": False, "sweep_s": 150.0, "wall_s": 155.0}
-    assert not f(4, [l, l, l, swept], 4, 6, 650.0, 900, retry_ceiling_s=120.0)
-    assert f(4, [l, l, l, swept], 4, 6, 600.0, 900, retry_ceiling_s=120.0)
-    # wall_s-only records (pre-r16 shape) still get the ceiling on top —
-    # conservative double-count of retries they may already include
-    assert not f(4, [l, l, l, slow], 4, 6, 650.0, 900, retry_ceiling_s=120.0)
-    # no wall record at all stays elapsed-only even with a ceiling set
-    assert f(4, [{"quiet": False}] * 4, 4, 6, 899.0, 900, retry_ceiling_s=120.0)
+    events = []
+    clock = [0.0]
+    # per-query run durations: the min is the middle run, never the first
+    durations = {
+        n: [0.312 + i, 0.123 + i, 0.234 + i] for i, n in enumerate(bench.BENCH_QUERIES)
+    }
+    calls = {n: 0 for n in bench.BENCH_QUERIES}
+
+    class Rows:
+        def __init__(self, name):
+            self.name = name
+
+        def count(self):
+            events.append(("count", self.name))
+            clock[0] += durations[self.name][calls[self.name]]
+            calls[self.name] += 1
+            return 42
+
+    def entry(name):
+        def fn(spark, sf_dir):
+            assert sf_dir == "fixture-dir"
+            events.append(("build", name))
+            return Rows(name)
+
+        return types.SimpleNamespace(fn=fn)
+
+    registry = {n: entry(n) for n in bench.BENCH_QUERIES}
+    conf = types.SimpleNamespace(unset=lambda k: events.append(("unset", k)))
+    monkeypatch.setattr(
+        probekit, "time", types.SimpleNamespace(perf_counter=lambda: clock[0])
+    )
+
+    result = bench.sweep(types.SimpleNamespace(conf=conf), registry, "fixture-dir")
+
+    resets = [("unset", k) for k in CONTEST_CONFS]
+    expected = []
+    for n in bench.BENCH_QUERIES:
+        expected += resets + [("build", n), ("count", n)] * 3
+    assert events == expected
+    assert list(result["timings"]) == bench.BENCH_QUERIES
+    for n, runs in durations.items():
+        assert abs(result["timings"][n] - min(runs)) < 1e-9
+    assert result["total"] == round(sum(result["timings"].values()), 3)
+    assert "steal_pct" in result
+    out = capsys.readouterr().out
+    assert out.count("# ") == len(bench.BENCH_QUERIES)

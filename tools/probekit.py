@@ -1,11 +1,8 @@
-"""Shared measurement plumbing for the probe/bench tooling (r7 VERDICT
-item 7): ``bench.py``, ``tools/probe_skew.py``, and
-``tools/run_registry_scale.py`` each grew their own copy of the same
-three steps — build the driver-default session, warm a query set at the
-smallest sf, and time ``fn(spark, dir).count()`` min-of-N — and three
-copies drift. One module, no behavior change: the session config, the
-warm-up protocol, and the timing loop are byte-for-byte what the three
-callers did inline.
+"""Shared measurement plumbing for the probe/bench tooling: ``bench.py``,
+``tools/probe_skew.py``, ``tools/run_registry_scale.py`` and
+``perfbench/run.py`` build the driver-default session, warm a query set at
+the smallest sf, time ``fn(spark, dir).count()`` min-of-N, and read
+hypervisor steal and status-store shuffle metrics through this one module.
 
 Why warm-up at sf0.001: JVM/codegen compilation and Python-worker startup
 are one-time costs that a per-query timing would otherwise bill to the
@@ -83,21 +80,6 @@ def steal_pct(before: tuple[int, int] | None, after: tuple[int, int] | None) -> 
     if not before or not after or after[1] <= before[1]:
         return None
     return round(100.0 * (after[0] - before[0]) / (after[1] - before[1]), 2)
-
-
-def sample_steal(seconds: float) -> float | None:
-    """Idle-sample hypervisor steal over ``seconds`` (None off-Linux).
-
-    The pre-sweep noise gate (r10 VERDICT item 3): two of the last three
-    committed bench artifacts were host noise (r8 ~18%, r10 25%) that the
-    manual quiet-box protocol filtered AFTER the fact; sampling steal
-    before the timed sweep lets bench.py refuse a loud sitting up front
-    instead of publishing it."""
-    before = cpu_ticks()
-    if before is None:
-        return None
-    time.sleep(seconds)
-    return steal_pct(before, cpu_ticks())
 
 
 def bench_session(app_name: str):
@@ -209,14 +191,11 @@ def warm_up(registry, names: Iterable[str], spark, warm_dir: str = WARM_DIR) -> 
 def timed_count(fn: Callable[[], int], runs: int = 3) -> tuple[float, int, list[float]]:
     """min-of-N wall-clock of ``fn()`` (a thunk ending in .count()).
 
-    min-of-N because this box is a shared VM with intermittent multi-×
-    host-level slowdowns (observed: identical plans, same session, 2.5s vs
-    49s); steady-state is the number that transfers to a real cluster, and
-    every run does full work. Default N=3 since r9 (r8
-    VERDICT item 3: BENCH_r08's committed reading carried ~18% host noise
-    that the builder's own min-of-3 quiet-box rerun filtered). Returns
-    (best, rows, all runs) — bench.py prints the full run list so the
-    spread is on record.
+    min-of-N because a shared VM has intermittent multi-× host-level
+    slowdowns (observed: identical plans, same session, 2.5s vs 49s);
+    steady-state is the number that transfers to a real cluster, and every
+    run does full work. Returns (best, rows, all runs) — bench.py prints
+    the full run list so the spread is on record.
     """
     times, n = [], 0
     for _ in range(runs):
