@@ -13,10 +13,11 @@ One sweep: a warm-up pass at the smallest fixture
 (``tools.probekit.warm_up``) keeps compilation and Python-worker startup
 off the first query timed; then every query starts from the canonical
 session confs (``tools.probekit.reset_confs``) and is timed min-of-3
-(``tools.probekit.timed_count``). Every timed run does full work:
-``stage()`` rewrites its staging table on each call, so a repeat run of a
-staging-backed query (dedup_minhash_lsh) pays the producing stages and the
-parquet write again. Each query's full run list goes on a ``# name:``
+(``tools.probekit.timed_count``) with the query's name as the job
+description, so event logs attribute its jobs. Every timed run does full
+work: ``stage()`` rewrites its staging table on each call, so a repeat run
+of a staging-backed query (dedup_minhash_lsh) pays the producing stages
+and the parquet write again. Each query's full run list goes on a ``# name:``
 comment line; the final line carries the per-query minima, their sum, and
 ``noise.steal_pct`` — the hypervisor steal over the sweep (None
 off-Linux), so a reading taken on a contended host says so. Wall-clock on
@@ -73,12 +74,17 @@ def sweep(spark, registry, sf_dir) -> dict:
     """Time every BENCH_QUERIES entry min-of-3 from a reset session."""
     from tools.probekit import cpu_ticks, reset_confs, steal_pct, timed_count
 
+    sc = spark.sparkContext
     ticks_start = cpu_ticks()
     timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
         fn = registry[name].fn
         reset_confs(spark)  # canonical session per query, by construction
-        timings[name], n, runs = timed_count(lambda: fn(spark, sf_dir).count())
+        sc.setJobDescription(name)  # the query's jobs carry its name
+        try:
+            timings[name], n, runs = timed_count(lambda: fn(spark, sf_dir).count())
+        finally:
+            sc.setJobDescription(None)
         print(f"# {name}: {timings[name]}s ({n} rows; runs={runs})", flush=True)
     return {
         "total": round(sum(timings.values()), 3),

@@ -16,3 +16,6 @@ and then always Arrow-vectorized (pandas_udf / applyInPandas / mapInPandas).
 """
 
 __version__ = "0.1.0"
+
+# installs the stat-keyed zipimport re-read on Python 3.10-3.11 (see module)
+from meos_rs_spark import _zipimport_compat  # noqa: E402,F401

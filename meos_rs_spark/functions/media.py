@@ -296,51 +296,54 @@ def jpeg_encode_gray(
         img.reshape(height // 8, 8, width // 8, 8).transpose(0, 2, 1, 3)
         .astype(np.float64) - 128.0
     )
-    coefs = np.einsum("ux,ijxy,vy->ijuv", a, blocks, a)
+    coefs = a @ blocks @ a.T  # F = A f A^T per block
     # quantize: round half away from zero (T.81 divides and rounds). The
     # 1e-9 bias makes the half-boundary DETERMINISTIC: an exact-integer
     # coefficient like a flat block's DC lands on x.5 exactly, and without
-    # the bias the einsum's ~1e-13 float noise decides the direction
+    # the bias the DCT's ~1e-13 float noise decides the direction
     # (q=16, v=1 reproduced both ways). The bias dwarfs the noise yet is
     # far below the smallest structural gap to a boundary, so only true
     # halves are affected — and they round away from zero, as specified.
     qc = (np.sign(coefs) * np.floor(np.abs(coefs) / q + 0.5 + 1e-9)).astype(np.int32)
+    # every block in zigzag order, raster block order (row-major MCUs), as
+    # Python ints: one gather and one AC test per image, not per block
+    zz_blocks = qc.reshape(-1, 64)[:, ZIGZAG]
+    has_ac = zz_blocks[:, 1:].any(axis=1).tolist()
+    zz_blocks = zz_blocks.tolist()
 
     dc_code = _huff_codes(tuple(_DC_BITS), tuple(_DC_VALS))
     ac_code = _huff_codes(tuple(_AC_BITS), tuple(_AC_VALS))
     bw = _BitWriter()
     pred = 0
-    for i in range(height // 8):
-        for j in range(width // 8):
-            zz = qc[i, j].reshape(64)[ZIGZAG]
-            size, bits = _coef_bits(int(zz[0]) - pred)
-            pred = int(zz[0])
-            c, ln = dc_code[size]
+    for zz, ac in zip(zz_blocks, has_ac):
+        size, bits = _coef_bits(zz[0] - pred)
+        pred = zz[0]
+        c, ln = dc_code[size]
+        bw.put(c, ln)
+        if size:
+            bw.put(bits, size)
+        if not ac:  # DC-only block: straight to EOB
+            c, ln = ac_code[0x00]
             bw.put(c, ln)
-            if size:
-                bw.put(bits, size)
-            if not zz[1:].any():  # DC-only block: straight to EOB
-                c, ln = ac_code[0x00]
-                bw.put(c, ln)
+            continue
+        run = 0
+        for k in range(1, 64):
+            v = zz[k]
+            if v == 0:
+                run += 1
                 continue
+            while run > 15:
+                c, ln = ac_code[0xF0]  # ZRL: 16 zeros
+                bw.put(c, ln)
+                run -= 16
+            size, bits = _coef_bits(v)
+            c, ln = ac_code[(run << 4) | size]
+            bw.put(c, ln)
+            bw.put(bits, size)
             run = 0
-            for k in range(1, 64):
-                v = int(zz[k])
-                if v == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    c, ln = ac_code[0xF0]  # ZRL: 16 zeros
-                    bw.put(c, ln)
-                    run -= 16
-                size, bits = _coef_bits(v)
-                c, ln = ac_code[(run << 4) | size]
-                bw.put(c, ln)
-                bw.put(bits, size)
-                run = 0
-            if run:
-                c, ln = ac_code[0x00]  # EOB
-                bw.put(c, ln)
+        if run:
+            c, ln = ac_code[0x00]  # EOB
+            bw.put(c, ln)
 
     def seg(marker: int, body: bytes) -> bytes:
         return struct.pack(">HH", marker, len(body) + 2) + body
@@ -508,34 +511,34 @@ def jpeg_decode_gray(data: bytes) -> tuple[int, int, bytes]:
 
     br = _BitReader(data, scan_at)
     nby, nbx = height // 8, width // 8
-    coefs = np.zeros((nby, nbx, 8, 8), dtype=np.float64)
+    # zigzag-order coefficients of every block, raster block order; one
+    # de-zigzag scatter per image below
+    zz_all = [0] * (nby * nbx * 64)
     pred = 0
-    for i in range(nby):
-        for j in range(nbx):
-            zz = [0] * 64
-            size = _huff_read(br, dc_tab)
-            pred += _extend(br.bits(size), size)
-            zz[0] = pred
-            k = 1
-            while k < 64:
-                rs = _huff_read(br, ac_tab)
-                run, size = rs >> 4, rs & 0x0F
-                if size == 0:
-                    if run == 15:  # ZRL
-                        k += 16
-                        continue
-                    break  # EOB
-                k += run
-                if k > 63:
-                    raise ValueError("AC run overflows the block")
-                zz[k] = _extend(br.bits(size), size)
-                k += 1
-            blk = np.zeros(64, dtype=np.float64)
-            blk[ZIGZAG] = zz
-            coefs[i, j] = blk.reshape(8, 8)
+    for base in range(0, len(zz_all), 64):
+        size = _huff_read(br, dc_tab)
+        pred += _extend(br.bits(size), size)
+        zz_all[base] = pred
+        k = 1
+        while k < 64:
+            rs = _huff_read(br, ac_tab)
+            run, size = rs >> 4, rs & 0x0F
+            if size == 0:
+                if run == 15:  # ZRL
+                    k += 16
+                    continue
+                break  # EOB
+            k += run
+            if k > 63:
+                raise ValueError("AC run overflows the block")
+            zz_all[base + k] = _extend(br.bits(size), size)
+            k += 1
+    coefs = np.zeros((nby * nbx, 64), dtype=np.float64)
+    coefs[:, ZIGZAG] = np.asarray(zz_all, dtype=np.float64).reshape(-1, 64)
+    coefs = coefs.reshape(nby, nbx, 8, 8)
 
     a = _dct_matrix()
-    spatial = np.einsum("xu,ijuv,yv->ijxy", a.T, coefs * q, a.T) + 128.0
+    spatial = a.T @ (coefs * q) @ a + 128.0  # f = A^T F A per block
     img = (
         np.clip(np.floor(spatial + 0.5), 0, 255)
         .astype(np.uint8)

@@ -137,8 +137,7 @@ class WktPositsDataSource(DataSource):
 
 
 def register_wkt_source(spark) -> None:
-    """Idempotently register the format with the session."""
-    try:
-        spark.dataSource.register(WktPositsDataSource)
-    except Exception:
-        pass  # already registered in this session
+    """Register the format with the session. Re-registering is allowed:
+    Spark replaces the entry without raising, so a repeat call is a no-op
+    in effect and any error is a real one."""
+    spark.dataSource.register(WktPositsDataSource)

@@ -406,6 +406,32 @@ def test_wkt_source_skips_unparseable_timestamps(tmp_path):
     assert rows[2]["ts"] == datetime(2024, 1, 1, 0, 0, 1, 500000)
 
 
+def test_wkt_source_registers_twice_and_surfaces_a_failing_register(
+    spark, tmp_path, monkeypatch
+):
+    """Spark re-registers a Python data source without raising, so
+    register_wkt_source needs no guard; a real registration failure must
+    reach the caller instead of being swallowed."""
+    import pytest
+
+    from meos_rs_spark.sources.wkt_source import register_wkt_source
+
+    (tmp_path / "posits.txt").write_text(
+        "7;POINT(1.5 2.5)@2024-01-01 00:00:00.000001+00\n"
+    )
+    register_wkt_source(spark)
+    register_wkt_source(spark)
+    back = spark.read.format("wktposits").option("path", str(tmp_path)).load()
+    assert [tuple(r) for r in back.select("mmsi", "lon", "lat").collect()] == [(7, 1.5, 2.5)]
+
+    def failing_register(self, data_source):
+        raise RuntimeError("registration refused")
+
+    monkeypatch.setattr(type(spark.dataSource), "register", failing_register)
+    with pytest.raises(RuntimeError, match="registration refused"):
+        register_wkt_source(spark)
+
+
 # --- asof_merge: adversarial contest vs a brute-force as-of ------------------
 
 

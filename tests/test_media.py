@@ -321,6 +321,57 @@ def test_jpeg_rejects_unsupported_variants():
         jpeg_encode_gray(b"\x00" * 63, 8, 8)  # wrong pixel count
 
 
+def _pin_noise(w, h):
+    import numpy as np
+
+    return np.random.default_rng(20261019).integers(0, 256, size=(h, w), dtype=np.uint8)
+
+
+def _pin_gradient(w, h):
+    import numpy as np
+
+    y, x = np.mgrid[0:h, 0:w]
+    return ((x * 255) // max(w - 1, 1) // 2 + (y * 255) // max(h - 1, 1) // 2).astype(np.uint8)
+
+
+def _pin_checker(w, h):
+    """8-px checkerboard offset by 4 px, so every 8x8 block is non-flat."""
+    import numpy as np
+
+    y, x = np.mgrid[0:h, 0:w]
+    return np.where(((x + 4) // 8 + (y + 4) // 8) % 2, 200, 40).astype(np.uint8)
+
+
+@pytest.mark.parametrize(
+    "image,w,h,quant,encoded_md5,decoded_md5",
+    [
+        (_pin_noise, 8, 8, None, "fb7037658c4473c56b4074fdcc4fd00a", "66f7a06e4ed53447384caa1448be17bf"),
+        (_pin_noise, 48, 32, None, "5e83575b00d66f923c819b36af423354", "84addd2fbfa6ccd232911711ddc2f950"),
+        (_pin_noise, 48, 32, [1] * 64, "632cfbda07a61be3d6d54096fbbbd4cf", "d2d546959e57bb50bab3625a22a237ee"),
+        (_pin_gradient, 8, 8, None, "c27527bfda321dc6089b9594f71164cd", "8dba5204053f686d41be6d02e599e1de"),
+        (_pin_gradient, 48, 32, None, "6a097be814a01d65cc299feef1ecf2ec", "997a0b3af40cba1db16bb177cd42f155"),
+        (_pin_checker, 8, 8, None, "5b04b2a81f4c23b3a8f68d455ea7ce97", "0d132f4fe447276e6d22e92ffb7be427"),
+        (_pin_checker, 48, 32, None, "ef3e0b8c6080c60ac1a77ac6f055df99", "6d7b086cee4722008b7b4ff1eeb98a40"),
+    ],
+    ids=["noise8x8", "noise48x32", "noise48x32-q1", "gradient8x8", "gradient48x32",
+         "checker8x8", "checker48x32"],
+)
+def test_jpeg_codec_bytes_are_pinned(image, w, h, quant, encoded_md5, decoded_md5):
+    """Byte-exact pins of the lossy path on non-flat images: the md5 of the
+    encoded stream and of the decoded pixels, recorded from the einsum-based
+    DCT/IDCT the matmul form replaced. Any change to the transform's
+    rounding, the zigzag order or the entropy coder moves one of them."""
+    import hashlib
+
+    px = image(w, h)
+    assert px.min() != px.max(), "pattern must be non-flat or the pin is weak"
+    blob = jpeg_encode_gray(px.tobytes(), w, h, quant=quant)
+    got_w, got_h, decoded = jpeg_decode_gray(blob)
+    assert (got_w, got_h) == (w, h)
+    assert hashlib.md5(blob).hexdigest() == encoded_md5
+    assert hashlib.md5(decoded).hexdigest() == decoded_md5
+
+
 @settings(max_examples=15, deadline=None)
 @given(
     bw=st.integers(min_value=1, max_value=4),

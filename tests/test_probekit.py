@@ -273,12 +273,28 @@ def test_warm_dir_is_the_smallest_fixture():
 def test_consumers_import_without_a_session():
     # module import must not build a SparkSession (bench_session is lazy)
     import bench
+    import tools.layer_profile
     import tools.probe_skew
     import tools.run_registry_scale
 
     assert callable(bench.main)
+    assert callable(tools.layer_profile.main)
     assert callable(tools.probe_skew.main)
     assert callable(tools.run_registry_scale.main)
+
+
+def test_no_tool_script_shadows_a_stdlib_module():
+    """``python tools/<name>.py`` puts tools/ first on sys.path, so a
+    tools/<stdlib name>.py replaces that stdlib module for everything the
+    script imports: a tools/profile.py made ``import pyspark.sql`` fail
+    (pyspark imports cProfile, which imports profile)."""
+    import pathlib
+    import sys
+
+    tools = pathlib.Path(__file__).resolve().parent.parent / "tools"
+    stems = [p.stem for p in tools.glob("*.py")]
+    assert stems, "tools/ not found"
+    assert sorted(set(stems) & sys.stdlib_module_names) == []
 
 
 def test_bench_final_line_fits_the_driver_tail_at_worst_case():
@@ -308,9 +324,10 @@ def test_bench_final_line_fits_the_driver_tail_at_worst_case():
 
 def test_bench_sweep_resets_once_and_times_min_of_three(monkeypatch, capsys):
     """Session-free check of the one bench sweep: per BENCH_QUERIES entry,
-    one reset_confs (one unset per contest conf) before three timed
-    builds+counts; queries[name] is the min of its three runs and the
-    headline value is their rounded sum."""
+    one reset_confs (one unset per contest conf), then the query's name as
+    job description around three timed builds+counts, cleared after them;
+    queries[name] is the min of its three runs and the headline value is
+    their rounded sum."""
     import types
 
     import bench
@@ -344,16 +361,24 @@ def test_bench_sweep_resets_once_and_times_min_of_three(monkeypatch, capsys):
 
     registry = {n: entry(n) for n in bench.BENCH_QUERIES}
     conf = types.SimpleNamespace(unset=lambda k: events.append(("unset", k)))
+    sc = types.SimpleNamespace(setJobDescription=lambda d: events.append(("describe", d)))
     monkeypatch.setattr(
         probekit, "time", types.SimpleNamespace(perf_counter=lambda: clock[0])
     )
 
-    result = bench.sweep(types.SimpleNamespace(conf=conf), registry, "fixture-dir")
+    result = bench.sweep(
+        types.SimpleNamespace(conf=conf, sparkContext=sc), registry, "fixture-dir"
+    )
 
     resets = [("unset", k) for k in CONTEST_CONFS]
     expected = []
     for n in bench.BENCH_QUERIES:
-        expected += resets + [("build", n), ("count", n)] * 3
+        expected += (
+            resets
+            + [("describe", n)]
+            + [("build", n), ("count", n)] * 3
+            + [("describe", None)]
+        )
     assert events == expected
     assert list(result["timings"]) == bench.BENCH_QUERIES
     for n, runs in durations.items():

@@ -7,7 +7,7 @@ and shuffle bytes the run added to the status store. Job descriptions are
 set per query so the (disabled-UI) status store rows stay attributable.
 
 Usage:
-    python tools/profile.py --round N [--tag before] [--runs 3] [name ...]
+    python tools/layer_profile.py --round N [--tag before] [--runs 3] [name ...]
 
 Writes a JSON summary to ``plans/r<N>/profile_<tag>.json`` and prints one
 line per query. The plan files are the evidence for every claim in
@@ -24,10 +24,7 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# replace (not prepend to) the script's own dir on the path: tools/profile.py
-# would otherwise shadow the stdlib ``profile`` module that cProfile — and
-# through it pyspark — imports
-sys.path[0] = REPO
+sys.path.insert(0, REPO)
 
 from bench import BENCH_QUERIES  # noqa: E402
 
