@@ -9,13 +9,16 @@ and a worker holds one importer per package directory it imported from
 re-read was most of the Python-worker time of a small task. Python 3.12
 made the re-read lazy, so there this module does nothing.
 
-On 3.10-3.11, :func:`install` wraps the method: an importer re-reads its
-archive only when the archive's ``(st_mtime_ns, st_size)`` differs from
-the one it saw at its own last read, or when ``stat`` fails; otherwise it
-keeps its cached directory. Importing the package installs it, so a Python
-worker that unpickles one of the package's kernels skips the re-read from
-its next task on. Delete this module once Python 3.11 is no longer
-supported.
+On 3.10-3.11, :func:`install` wraps the method: an archive is re-read
+only when its ``(st_mtime_ns, st_size)`` differs from the one recorded at
+its last read by any importer, or when ``stat`` fails. Otherwise the
+importer takes the shared directory that read left in
+``zipimport._zip_directory_cache``, so every importer of one archive sees
+the same, current directory and a worker pays one read per archive change
+instead of one per importer. Importing the package installs it, so a
+Python worker that unpickles one of the package's kernels skips the
+re-read from its next task on. Delete this module once Python 3.11 is no
+longer supported.
 """
 
 from __future__ import annotations
@@ -28,18 +31,24 @@ import zipimport
 _ORIGINAL = zipimport.zipimporter.invalidate_caches
 
 
+#: archive path -> its (st_mtime_ns, st_size) at its last directory read
+_READ_KEYS: dict = {}
+
+
 def _stat_keyed_invalidate_caches(self) -> None:
-    """Re-read the archive only if it changed since this importer read it."""
+    """Re-read the archive only if it changed since any importer read it."""
     try:
         st = os.stat(self.archive)
     except OSError:
         key = None
     else:
         key = (st.st_mtime_ns, st.st_size)
-        if key == self.__dict__.get("_meos_read_key"):
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and key == _READ_KEYS.get(self.archive):
+            self._files = files
             return
     _ORIGINAL(self)
-    self._meos_read_key = key
+    _READ_KEYS[self.archive] = key
 
 
 def install() -> bool:

@@ -10,6 +10,9 @@ never a cartesian product. The DuckDB twin runs the quadratic theta join
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +48,17 @@ boxes AS (
 _PRED = tbox_pred_sql("a", "b")
 
 
+def _type_box_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every ordered pair of per-event-type TBoxes (the 8×8 twin of
+    _TYPE_BOX_CTE's self cross join): type_a, a, type_b, b."""
+    boxes = load_table(spark, sf_dir, "events").groupBy("event_type").agg(
+        tbox(F.min("value"), F.max("value"), F.min("ts"), F.max("ts")).alias("box")
+    )
+    a = boxes.select(F.col("event_type").alias("type_a"), F.col("box").alias("a"))
+    b = boxes.select(F.col("event_type").alias("type_b"), F.col("box").alias("b"))
+    return a.crossJoin(F.broadcast(b))
+
+
 # --- F8/F9: predicate matrix ----------------------------------------------
 
 
@@ -69,19 +83,8 @@ FROM boxes a CROSS JOIN boxes b
     "event-type dimension — 8×8 pairs regardless of data scale.",
 )
 def box_tbox_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    boxes = ev.groupBy("event_type").agg(
-        F.min("value").alias("xmin"),
-        F.max("value").alias("xmax"),
-        F.min("ts").alias("tmin"),
-        F.max("ts").alias("tmax"),
-    )
-    a = boxes.select(F.col("event_type").alias("type_a"), tbox(
-        F.col("xmin"), F.col("xmax"), F.col("tmin"), F.col("tmax")).alias("a"))
-    b = boxes.select(F.col("event_type").alias("type_b"), tbox(
-        F.col("xmin"), F.col("xmax"), F.col("tmin"), F.col("tmax")).alias("b"))
     ca, cb = F.col("a"), F.col("b")
-    return a.crossJoin(F.broadcast(b)).select(
+    return _type_box_pairs(spark, sf_dir).select(
         "type_a",
         "type_b",
         tbox_contains(ca, cb).cast("int").alias("contains"),
@@ -201,21 +204,14 @@ _SALT_TARGET_PAIRS = 1 << 20
 _OVERLAP_CHUNKS_MAX = 64
 
 
-def _salt_chunks(cells: DataFrame, *keys: str):
-    """Adaptive chunk-salt K for a grid self-join, as a scalar-subquery
-    Column over the unsalted cell census (see _SALT_TARGET_PAIRS note)."""
+def _chunks_for_max(m):
+    """Chunk-salt K for a hottest cell of ``m`` boxes (a bigint Column):
+    ``ceil(m / sqrt(_SALT_TARGET_PAIRS))`` clamped to [1,
+    _OVERLAP_CHUNKS_MAX]. The clamp runs in LONG and narrows to int only
+    after the cap: ceil() of an extreme count exceeds INT_MAX exactly on
+    the most skewed inputs, and an early cast would abort under ANSI."""
     import math
 
-    m = (
-        cells.groupBy(*[F.col(k) for k in keys])
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("m"))
-        .scalar()
-    )
-    # clamp in LONG, narrow to int only after the cap: ceil() of an
-    # extreme hottest-cell count exceeds INT_MAX exactly on the most
-    # skewed inputs, and an early cast would abort under ANSI (r16
-    # self-review find)
     return (
         F.greatest(
             F.lit(1).cast("bigint"),
@@ -228,6 +224,19 @@ def _salt_chunks(cells: DataFrame, *keys: str):
         )
         .cast("int")
     )
+
+
+def _salt_chunks(cells: DataFrame, *keys: str):
+    """Adaptive chunk-salt K for a grid self-join, as a scalar-subquery
+    Column over the unsalted cell census (see _SALT_TARGET_PAIRS note)."""
+    m = (
+        cells.groupBy(*[F.col(k) for k in keys])
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.max("n").alias("m"))
+        .scalar()
+    )
+    return _chunks_for_max(m)
+
 
 #: adaptive-grid cap: cell size never drops below (data span / _MAX_GRID)
 #: per axis, so one domain-spanning outlier box streams at most
@@ -245,9 +254,8 @@ def _adaptive_cell_stats(vbox: DataFrame):
     on dense data, real pruning on sparse), floored at span/_MAX_GRID per
     axis (bounds one outlier box's streamed cell rows) and at 1e-9 for
     degenerate single-point data; origin anchored at the data min (ANSI
-    int-overflow guard, r8 review find). ONE shared implementation for
-    both J5 variants so the hard-won floors/anchor can't drift between
-    them (r9 review find). Returns (cw, ch, x0, y0) scalar Columns."""
+    int-overflow guard, r8 review find). Returns (cw, ch, x0, y0) scalar
+    Columns."""
     stats = vbox.agg(
         F.struct(
             F.greatest(
@@ -267,6 +275,117 @@ def _adaptive_cell_stats(vbox: DataFrame):
     return stats["cw"], stats["ch"], stats["x0"], stats["y0"]
 
 
+def _grid_overlap_pairs(
+    boxes: DataFrame,
+    key: tuple[str, ...],
+    fields: tuple[str, ...],
+    extra_axes: tuple[tuple, ...],
+    refine,
+) -> DataFrame:
+    """The J5 grid join: every pair of ``boxes`` rows with
+    ``key[0]_a < key[0]_b`` that passes ``refine(a, b)``, exactly once, as
+    ``<key>_a`` / ``<key>_b`` columns. Never a cartesian product.
+
+    ``boxes`` holds the ``key`` columns, xmin/xmax/ymin/ymax and
+    ``fields``; ``a`` and ``b`` are the two sides' ``struct(*fields)``.
+    Each box explodes into the grid cells it spans: adaptive x/y cells
+    (_adaptive_cell_stats) plus one cell axis per ``extra_axes`` entry,
+    given as ``(a_lo, a_hi, b_lo, b_hi)`` cell-index Columns so the a-side
+    may cover a widened range. Sides equi-join on (cells, ca, cb), where
+    ca/cb is the two-sided chunk salt: each (a, b) pair meets exactly once
+    per shared cell, at (ca(a), cb(b)), and a hot cell spreads over K²
+    tasks. The join keys stay primitive ints: a struct-typed key measured
+    ~3x slower per probed candidate. A pair is emitted only at its
+    CANONICAL cell, the per-axis max of the two sides' first covered
+    cells (the reference-point rule): both boxes cover it, so the output
+    is duplicate-free without shuffling a distinct over ~10x duplicated
+    candidates. floor and div are monotone, so cell(max(u, v)) ==
+    max(cell(u), cell(v)) and the test is pure int comparisons, with no
+    scalar subquery in the per-candidate filter.
+    """
+    # Explicit-count repartition BEFORE the explode: the box table is tiny
+    # post-shuffle, so AQE coalesces its exchange down to one partition,
+    # blind to the ×(cells × chunks) Generate expansion after it, and the
+    # whole quadratic join then runs on ONE task (observed live at ×10: a
+    # 1G-candidate probe single-threaded). A user-specified partition count
+    # is exempt from AQE coalescing.
+    boxes = fan_out(boxes, *key, force=True)
+    cw, ch, x0, y0 = _adaptive_cell_stats(boxes)
+    # Cell bounds computed OUTSIDE the higher-order function: subquery
+    # expressions (the adaptive cw/ch) are not allowed inside lambdas.
+    # Indexes are ANCHORED at the data min: un-anchored floor(xmin/cw) with
+    # a tiny adaptive cw (degenerate or tightly clustered data far from 0)
+    # produces indexes ≫ 2^31 and CAST_OVERFLOW under ANSI; anchoring
+    # bounds them to ~_MAX_GRID, and bigint removes the ceiling entirely.
+    bounded = boxes.select(
+        "*",
+        F.floor((F.col("xmin") - x0) / cw).cast("bigint").alias("__x0"),
+        F.floor((F.col("xmax") - x0) / cw).cast("bigint").alias("__x1"),
+        F.floor((F.col("ymin") - y0) / ch).cast("bigint").alias("__y0"),
+        F.floor((F.col("ymax") - y0) / ch).cast("bigint").alias("__y1"),
+        *[c.alias(f"__e{i}_{j}") for i, axis in enumerate(extra_axes) for j, c in enumerate(axis)],
+    )
+    # per axis, the bound columns (a_lo, a_hi, b_lo, b_hi); a side's range
+    # starts at offset 0, b side's at 2
+    axes = [("__x0", "__x1") * 2, ("__y0", "__y1") * 2]
+    axes += [tuple(f"__e{i}_{j}" for j in range(4)) for i in range(len(extra_axes))]
+    cells = [f"__cell{i}" for i in range(len(axes))]
+    offset = {"a": 0, "b": 2}
+
+    def explode(df: DataFrame, s: str) -> DataFrame:
+        # chained explodes, not one flattened array: a domain-spanning
+        # outlier box covers up to _MAX_GRID cells PER AXIS, and flattening
+        # would materialize the whole cross product as one in-row array
+        # before the Generate; nested Generates stream it row by row
+        o = offset[s]
+        for cell, axis in zip(cells, axes):
+            df = df.withColumn(cell, F.explode(F.sequence(axis[o], axis[o + 1])))
+        return df
+
+    b_cells = explode(bounded, "b")
+    # the a side explodes its own cells only where an axis widens its range
+    a_cells = b_cells if all(ax[:2] == ax[2:] for ax in axes) else explode(bounded, "a")
+    # adaptive chunk salt (see _SALT_TARGET_PAIRS) from the b-side census:
+    # a widened a-side differs by at most one adjacent cell per axis, within
+    # the heuristic's tolerance. The per-row __k column keeps the scalar
+    # subquery in a Project (legal) while the Generate below references a
+    # plain attribute.
+    chunks = _salt_chunks(b_cells, *cells)
+
+    def side(df: DataFrame, s: str, other: str) -> DataFrame:
+        return df.withColumn("__k", chunks).select(
+            *[F.col(k).alias(f"{k}_{s}") for k in key],
+            *[F.col(c).alias(f"{c}_{s}") for c in cells],
+            *[F.col(axis[offset[s]]).alias(f"__first{i}_{s}") for i, axis in enumerate(axes)],
+            F.struct(*fields).alias(s),
+            F.pmod(F.hash(*key), F.col("__k")).alias(f"c{s}"),
+            F.explode(F.sequence(F.lit(0), F.col("__k") - F.lit(1))).alias(f"c{other}"),
+        )
+
+    # Explicit-count co-partitioned exchanges on the join keys (same key
+    # order, same count, both sides): the exploded cell tables are a few MB
+    # post-shuffle at fixture scale, so AQE coalesces the join's exchanges
+    # toward ONE task, blind to the candidate-pair expansion the probe does
+    # per partition, and the refinement serializes (measured 40s at sf0.1
+    # for ~11M banded pairs, max-task share 0.44). A user-specified count
+    # is AQE-coalesce-exempt and satisfies the join's clustered
+    # distribution, so no second exchange appears. The join lists its keys
+    # in the same order as these exchanges.
+    a = fan_out(side(a_cells, "a", "b"), *[f"{c}_a" for c in cells], "ca", "cb", force=True)
+    b = fan_out(side(b_cells, "b", "a"), *[f"{c}_b" for c in cells], "ca", "cb", force=True)
+    on = [a[f"{c}_a"] == b[f"{c}_b"] for c in cells]
+    on += [a.ca == b.ca, a.cb == b.cb, a[f"{key[0]}_a"] < b[f"{key[0]}_b"]]
+    canonical = [
+        F.col(f"{c}_a") == F.greatest(F.col(f"__first{i}_a"), F.col(f"__first{i}_b"))
+        for i, c in enumerate(cells)
+    ]
+    return (
+        a.join(b, functools.reduce(operator.and_, on))
+        .filter(functools.reduce(operator.and_, canonical, refine(F.col("a"), F.col("b"))))
+        .select(*[f"{k}_a" for k in key], *[f"{k}_b" for k in key])
+    )
+
+
 _STBOX_CTE = f"""
 {POSITS_XY_CTE},
 vbox AS (
@@ -277,6 +396,19 @@ vbox AS (
   FROM posits GROUP BY mmsi
 )
 """
+
+
+def _posit_boxes(spark: SparkSession, sf_dir: str, *keys) -> DataFrame:
+    """Per-``keys`` x/y/t extents of the posits (the Spark twin of the
+    oracles' vbox / vdbox CTEs)."""
+    return posits_xy(spark, sf_dir).groupBy(*keys).agg(
+        F.min("lon").alias("xmin"),
+        F.max("lon").alias("xmax"),
+        F.min("lat").alias("ymin"),
+        F.max("lat").alias("ymax"),
+        F.min("ts").alias("tmin"),
+        F.max("ts").alias("tmax"),
+    )
 
 
 @register(
@@ -300,133 +432,13 @@ FROM vbox a JOIN vbox b
     "shuffled (SURVEY §2.3 J5); oracle runs the quadratic theta join.",
 )
 def box_stbox_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Three scale hazards found by the r8 full-registry ×10 sweep, each
-    # fixed structurally (together: 493s -> ~12s at ×10, same output):
-    #  * a FIXED cell size is wrong whenever boxes aren't cell-sized: the
-    #    fixture's trajectory boxes span half the domain, so at 50x50 every
-    #    pair met in ~10 shared cells (10x redundant candidate tests).
-    #    Cell = median box extent per axis (the textbook grid-join choice)
-    #    keeps mean coverage at ~2x2 cells for ANY box distribution —
-    #    graceful degradation to near-all-pairs on dense data, real pruning
-    #    on sparse data. Computed by an inlined scalar subquery (no join);
-    #    floored at span/_MAX_GRID per axis (bounding one outlier box's
-    #    streamed cell rows) and at 1e-9 for degenerate single-point data.
-    #  * parallelism was capped at the DISTINCT CELL COUNT — the two-sided
-    #    chunk salt joins on (cellx, celly, ca, cb), spreading each hot
-    #    cell over K² tasks in the shuffle path; each (a, b) pair still
-    #    meets exactly once per shared cell, at (ca(a), cb(b)). The join
-    #    keys stay primitive ints: a struct-typed key measured ~3x slower
-    #    per probed candidate.
-    #  * `.distinct()` shuffled every duplicated candidate pair (~10x the
-    #    already-quadratic output) — the canonical-cell filter emits a pair
-    #    only where the join cell holds the intersection's min corner
-    #    (both boxes always cover that cell, so exactly one cell emits),
-    #    making the join output duplicate-free by construction.
-    vbox = (
-        posits_xy(spark, sf_dir)
-        .groupBy("mmsi")
-        .agg(
-            F.min("lon").alias("xmin"),
-            F.max("lon").alias("xmax"),
-            F.min("lat").alias("ymin"),
-            F.max("lat").alias("ymax"),
-            F.min("ts").alias("tmin"),
-            F.max("ts").alias("tmax"),
-        )
+    return _grid_overlap_pairs(
+        _posit_boxes(spark, sf_dir, "mmsi"),
+        ("mmsi",),
+        ("xmin", "xmax", "ymin", "ymax", "tmin", "tmax"),
+        (),
+        stbox_overlaps,
     )
-    # Explicit-count repartition BEFORE the explode: the per-vessel box
-    # summary is tiny post-shuffle (one row per vessel), so AQE coalesces
-    # the aggregate's exchange down to one partition — blind to the ×(cells
-    # × chunks) Generate expansion after it — and the whole quadratic join
-    # then runs on ONE task (observed live at ×10: a 1G-candidate probe
-    # single-threaded). A user-specified partition count is exempt from
-    # AQE coalescing; the extra exchange moves one summary row per vessel.
-    vbox = fan_out(vbox, "mmsi", force=True)
-    cw, ch, x0, y0 = _adaptive_cell_stats(vbox)
-    # Cell bounds computed OUTSIDE the higher-order function: subquery
-    # expressions (the adaptive cw/ch) are not allowed inside lambdas.
-    # Indexes are ANCHORED at the data min, not the coordinate origin —
-    # un-anchored floor(xmin/cw) with a tiny adaptive cw (degenerate or
-    # tightly clustered data far from 0) produces indexes ≫ 2^31 and
-    # CAST_OVERFLOW under ANSI; anchoring bounds them to ~_MAX_GRID, and
-    # bigint removes the ceiling entirely (r8 review find). floor() keeps
-    # the canonical-cell identity floor(max(u,v)) == max(floor(u), floor(v))
-    # regardless of anchor.
-    bounded = vbox.select(
-        "*",
-        F.floor((F.col("xmin") - x0) / cw).cast("bigint").alias("cx0"),
-        F.floor((F.col("xmax") - x0) / cw).cast("bigint").alias("cx1"),
-        F.floor((F.col("ymin") - y0) / ch).cast("bigint").alias("cy0"),
-        F.floor((F.col("ymax") - y0) / ch).cast("bigint").alias("cy1"),
-    )
-    # two chained explodes, not one flattened array: a domain-spanning
-    # outlier box covers up to _MAX_GRID cells PER AXIS, and flattening
-    # would materialize the full cx×cy cross product as one in-row array
-    # before the Generate; nested Generates stream it row by row
-    cells = (
-        bounded.withColumn("cellx", F.explode(F.sequence(F.col("cx0"), F.col("cx1"))))
-        .withColumn("celly", F.explode(F.sequence(F.col("cy0"), F.col("cy1"))))
-    )
-    # adaptive chunk salt (see _SALT_TARGET_PAIRS): K is a scalar subquery
-    # over the unsalted cell census, attached as a per-row __k column so
-    # the Generate/pmod below reference a plain attribute (subqueries are
-    # legal in a Project, not inside a generator expression); both sides'
-    # identical census subqueries dedupe via subquery reuse
-    K = _salt_chunks(cells, "cellx", "celly")
-    cells = cells.withColumn("__k", K)
-    a = cells.select(
-        F.col("mmsi").alias("mmsi_a"),
-        F.col("cellx").alias("cx_a"),
-        F.col("celly").alias("cy_a"),
-        F.col("cx0").alias("cx0_a"),
-        F.col("cy0").alias("cy0_a"),
-        F.struct("xmin", "xmax", "ymin", "ymax", "tmin", "tmax").alias("a"),
-        F.pmod(F.hash("mmsi"), F.col("__k")).alias("ca"),
-        F.explode(F.sequence(F.lit(0), F.col("__k") - F.lit(1))).alias("cb"),
-    )
-    b = cells.select(
-        F.col("mmsi").alias("mmsi_b"),
-        F.col("cellx").alias("cx_b"),
-        F.col("celly").alias("cy_b"),
-        F.col("cx0").alias("cx0_b"),
-        F.col("cy0").alias("cy0_b"),
-        F.struct("xmin", "xmax", "ymin", "ymax", "tmin", "tmax").alias("b"),
-        F.pmod(F.hash("mmsi"), F.col("__k")).alias("cb"),
-        F.explode(F.sequence(F.lit(0), F.col("__k") - F.lit(1))).alias("ca"),
-    )
-    # floor is monotonic, so floor(max(xmin_a, xmin_b)/cw) ==
-    # max(floor(xmin_a/cw), floor(xmin_b/cw)) — the canonical cell is the
-    # per-axis MAX of the two boxes' first covered cells, precomputed per
-    # ROW above. Keeps the scalar subquery (cw/ch) out of the per-candidate
-    # hot filter: pure int comparisons, fully codegen-friendly.
-    canonical = (
-        (F.col("cx_a") == F.greatest(F.col("cx0_a"), F.col("cx0_b")))
-        & (F.col("cy_a") == F.greatest(F.col("cy0_a"), F.col("cy0_b")))
-    )
-    # Explicit-count co-partitioned exchanges on the join keys (same key
-    # order, same count, both sides) — the banded sibling's fix backported
-    # (r10 review): the exploded cell tables are a few MB post-shuffle at
-    # fixture scale, so AQE coalesces the join's exchanges toward ONE task
-    # — blind to the candidate-pair expansion the probe does per partition
-    # — and the quadratic refinement serializes. A user-specified count is
-    # AQE-coalesce-exempt and satisfies the join's clustered distribution
-    # (no second exchange); at real scale these exchanges exceed the
-    # advisory size and spread on their own.
-    a = fan_out(a, "cx_a", "cy_a", "ca", "cb", force=True)
-    b = fan_out(b, "cx_b", "cy_b", "ca", "cb", force=True)
-    pairs = (
-        a.join(
-            b,
-            (a.cx_a == b.cx_b)
-            & (a.cy_a == b.cy_b)
-            & (a.ca == b.ca)
-            & (a.cb == b.cb)
-            & (a.mmsi_a < b.mmsi_b),
-        )
-        .filter(stbox_overlaps(F.col("a"), F.col("b")) & canonical)
-        .select("mmsi_a", "mmsi_b")
-    )
-    return pairs
 
 
 # --- J5 banded: overlap WITHIN a time band (the production shape) ----------
@@ -494,140 +506,50 @@ def box_stbox_overlap_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one row per input box. The grid join gains a third (time) axis so the
     # candidate set is banded by construction; the band refinement is exact
     # µs arithmetic (matching the oracle's INTERVAL arithmetic exactly).
-    vbox = (
-        posits_xy(spark, sf_dir)
-        .groupBy("mmsi", F.to_date("ts").alias("d"))
-        .agg(
-            F.min("lon").alias("xmin"),
-            F.max("lon").alias("xmax"),
-            F.min("lat").alias("ymin"),
-            F.max("lat").alias("ymax"),
-            F.min("ts").alias("tmin"),
-            F.max("ts").alias("tmax"),
-        )
-        .select(
-            "*",
-            F.unix_micros(F.col("tmin").cast("timestamp")).alias("t0us"),
-            F.unix_micros(F.col("tmax").cast("timestamp")).alias("t1us"),
-        )
-    )
-    # explicit-count repartition before the explodes — same AQE-coalesce-
-    # before-Generate hazard as the parent (aqe-coalesce trap, r8)
-    vbox = fan_out(vbox, "mmsi", "d", force=True)
-    # adaptive spatial cells, exactly the parent's policy (shared helper)
-    cw, ch, x0, y0 = _adaptive_cell_stats(vbox)
-    # spatial cell bounds anchored at the data min (ANSI-overflow guard,
-    # same as the parent); time cells in exact integer µs via `div` — the
-    # a-side covers the Δ-EXPANDED interval, the b-side the raw one, so
-    # band-passing pairs meet in ≥1 shared time cell and non-banded ones
-    # are pruned before the refinement ever sees them.
-    bounded = vbox.select(
+    vbox = _posit_boxes(spark, sf_dir, "mmsi", F.to_date("ts").alias("d")).select(
         "*",
-        F.floor((F.col("xmin") - x0) / cw).cast("bigint").alias("cx0"),
-        F.floor((F.col("xmax") - x0) / cw).cast("bigint").alias("cx1"),
-        F.floor((F.col("ymin") - y0) / ch).cast("bigint").alias("cy0"),
-        F.floor((F.col("ymax") - y0) / ch).cast("bigint").alias("cy1"),
-        F.expr(f"(t0us - {_BAND_US}) div {_TCELL_US}").alias("cta0"),
-        F.expr(f"(t1us + {_BAND_US}) div {_TCELL_US}").alias("cta1"),
-        F.expr(f"t0us div {_TCELL_US}").alias("ctb0"),
-        F.expr(f"t1us div {_TCELL_US}").alias("ctb1"),
+        F.unix_micros(F.col("tmin").cast("timestamp")).alias("t0us"),
+        F.unix_micros(F.col("tmax").cast("timestamp")).alias("t1us"),
     )
-    # adaptive chunk salt (see _SALT_TARGET_PAIRS): census over the
-    # UNSALTED b-side (raw time-cell) census — the a-side's Δ-expanded
-    # cells differ by at most one adjacent time cell, within the
-    # heuristic's tolerance; the per-row __k column keeps the subquery in
-    # a Project (legal) while the Generate references a plain attribute
-    b_cells = (
-        bounded.withColumn("cellx", F.explode(F.sequence("cx0", "cx1")))
-        .withColumn("celly", F.explode(F.sequence("cy0", "cy1")))
-        .withColumn("cellt", F.explode(F.sequence("ctb0", "ctb1")))
+    # time cells in exact integer µs via `div`: the a-side covers the
+    # Δ-EXPANDED interval, the b-side the raw one, so band-passing pairs
+    # meet in ≥1 shared time cell and non-banded ones are pruned before the
+    # refinement ever sees them
+    time_axis = (
+        F.expr(f"(t0us - {_BAND_US}) div {_TCELL_US}"),
+        F.expr(f"(t1us + {_BAND_US}) div {_TCELL_US}"),
+        F.expr(f"t0us div {_TCELL_US}"),
+        F.expr(f"t1us div {_TCELL_US}"),
     )
-    K = _salt_chunks(b_cells, "cellx", "celly", "cellt")
-    bounded = bounded.withColumn("__k", K)
-    a = (
-        bounded.withColumn("cellx", F.explode(F.sequence("cx0", "cx1")))
-        .withColumn("celly", F.explode(F.sequence("cy0", "cy1")))
-        .withColumn("cellt", F.explode(F.sequence("cta0", "cta1")))
-        .select(
-            F.col("mmsi").alias("mmsi_a"),
-            F.col("d").alias("d_a"),
-            "cellx",
-            "celly",
-            "cellt",
-            F.col("cx0").alias("cx0_a"),
-            F.col("cy0").alias("cy0_a"),
-            F.col("cta0").alias("ct0_a"),
-            F.struct("xmin", "xmax", "ymin", "ymax", "t0us", "t1us").alias("a"),
-            F.pmod(F.hash("mmsi", "d"), F.col("__k")).alias("ca"),
-            F.explode(F.sequence(F.lit(0), F.col("__k") - F.lit(1))).alias("cb"),
+
+    def banded_overlap(a, b):
+        return (
+            (a["xmin"] <= b["xmax"])
+            & (b["xmin"] <= a["xmax"])
+            & (a["ymin"] <= b["ymax"])
+            & (b["ymin"] <= a["ymax"])
+            & (a["t1us"] >= b["t0us"] - F.lit(_BAND_US))
+            & (a["t0us"] <= b["t1us"] + F.lit(_BAND_US))
         )
-    )
-    b = (
-        bounded.withColumn("cellx", F.explode(F.sequence("cx0", "cx1")))
-        .withColumn("celly", F.explode(F.sequence("cy0", "cy1")))
-        .withColumn("cellt", F.explode(F.sequence("ctb0", "ctb1")))
-        .select(
-            F.col("mmsi").alias("mmsi_b"),
-            F.col("d").alias("d_b"),
-            F.col("cellx").alias("cx_b"),
-            F.col("celly").alias("cy_b"),
-            F.col("cellt").alias("ct_b"),
-            F.col("cx0").alias("cx0_b"),
-            F.col("cy0").alias("cy0_b"),
-            F.col("ctb0").alias("ct0_b"),
-            F.struct("xmin", "xmax", "ymin", "ymax", "t0us", "t1us").alias("b"),
-            F.pmod(F.hash("mmsi", "d"), F.col("__k")).alias("cb"),
-            F.explode(F.sequence(F.lit(0), F.col("__k") - F.lit(1))).alias("ca"),
-        )
-    )
-    # canonical 3D cell: the per-axis MAX of the two sides' first covered
-    # cells (the a-side's time range is the Δ-expanded one, so its first
-    # cell is floor((t0us-Δ)/W) — the same value the canonical test uses,
-    # keeping the emit-once identity exact per axis, as in the parent)
-    canonical = (
-        (F.col("cellx") == F.greatest(F.col("cx0_a"), F.col("cx0_b")))
-        & (F.col("celly") == F.greatest(F.col("cy0_a"), F.col("cy0_b")))
-        & (F.col("cellt") == F.greatest(F.col("ct0_a"), F.col("ct0_b")))
-    )
-    banded_overlap = (
-        (F.col("a.xmin") <= F.col("b.xmax"))
-        & (F.col("b.xmin") <= F.col("a.xmax"))
-        & (F.col("a.ymin") <= F.col("b.ymax"))
-        & (F.col("b.ymin") <= F.col("a.ymax"))
-        & (F.col("a.t1us") >= F.col("b.t0us") - F.lit(_BAND_US))
-        & (F.col("a.t0us") <= F.col("b.t1us") + F.lit(_BAND_US))
-    )
-    # Explicit-count co-partitioned exchanges on the join keys (same key
-    # order, same count, both sides): the exploded cell tables are a few MB
-    # post-shuffle at fixture scale, so AQE coalesces the join's exchanges
-    # toward ONE task — blind to the candidate-pair expansion the probe
-    # does per partition — and the whole refinement serializes (measured
-    # 40s at sf0.1 for ~11M qualifying pairs, max-task share 0.44). A
-    # user-specified count is AQE-coalesce-exempt and satisfies the join's
-    # clustered distribution, so no second exchange appears; at real scale
-    # these exchanges exceed the advisory size and spread on their own.
-    a = fan_out(a, "cellx", "celly", "cellt", "ca", "cb", force=True)
-    b = fan_out(b, "cx_b", "cy_b", "ct_b", "ca", "cb", force=True)
-    pairs = (
-        a.join(
-            b,
-            (a.cellx == b.cx_b)
-            & (a.celly == b.cy_b)
-            & (a.cellt == b.ct_b)
-            & (a.ca == b.ca)
-            & (a.cb == b.cb)
-            & (a.mmsi_a < b.mmsi_b),
-        )
-        .filter(banded_overlap & canonical)
-        .select("mmsi_a", "d_a", "mmsi_b", "d_b")
+
+    pairs = _grid_overlap_pairs(
+        vbox,
+        ("mmsi", "d"),
+        ("xmin", "xmax", "ymin", "ymax", "t0us", "t1us"),
+        (time_axis,),
+        banded_overlap,
     )
     # per-box encounter count WITHOUT a join-back: each pair contributes 1
-    # to both of its boxes, every box contributes a 0 row, one aggregation
+    # to both of its boxes, every box contributes a 0 row, one aggregation.
+    # One explode reads the pairs once; a union leg per side would run the
+    # whole grid join twice.
+    sides = F.array(
+        F.struct(F.col("mmsi_a").alias("mmsi"), F.col("d_a").alias("d")),
+        F.struct(F.col("mmsi_b").alias("mmsi"), F.col("d_b").alias("d")),
+    )
     contrib = (
-        pairs.select(F.col("mmsi_a").alias("mmsi"), F.col("d_a").alias("d"), F.lit(1).alias("c"))
-        .unionAll(
-            pairs.select(F.col("mmsi_b").alias("mmsi"), F.col("d_b").alias("d"), F.lit(1).alias("c"))
-        )
+        pairs.select(F.explode(sides).alias("box"))
+        .select("box.*", F.lit(1).alias("c"))
         .unionAll(vbox.select("mmsi", "d", F.lit(0).alias("c")))
     )
     return (
@@ -667,14 +589,7 @@ FROM vbox
     "a dwithin(traj, region, d) test reduces to overlap of the expanded box",
 )
 def box_stbox_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    vbox = (
-        posits_xy(spark, sf_dir)
-        .groupBy("mmsi")
-        .agg(
-            F.min("lon").alias("xmin"), F.max("lon").alias("xmax"),
-            F.min("lat").alias("ymin"), F.max("lat").alias("ymax"),
-        )
-    )
+    vbox = _posit_boxes(spark, sf_dir, "mmsi")
     exmin = F.col("xmin") - _EXPAND_D
     exmax = F.col("xmax") + _EXPAND_D
     eymin = F.col("ymin") - _EXPAND_D
@@ -718,21 +633,10 @@ FROM boxes a CROSS JOIN boxes b
     "aggregate of the fact, so the pairwise algebra never touches raw rows.",
 )
 def box_tbox_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    boxes = ev.groupBy("event_type").agg(
-        F.min("value").alias("xmin"),
-        F.max("value").alias("xmax"),
-        F.min("ts").alias("tmin"),
-        F.max("ts").alias("tmax"),
-    )
-    a = boxes.select(F.col("event_type").alias("type_a"), tbox(
-        F.col("xmin"), F.col("xmax"), F.col("tmin"), F.col("tmax")).alias("a"))
-    b = boxes.select(F.col("event_type").alias("type_b"), tbox(
-        F.col("xmin"), F.col("xmax"), F.col("tmin"), F.col("tmax")).alias("b"))
     ca, cb = F.col("a"), F.col("b")
     u = tbox_union(ca, cb)
     i = tbox_intersection(ca, cb)
-    return a.crossJoin(F.broadcast(b)).select(
+    return _type_box_pairs(spark, sf_dir).select(
         "type_a",
         "type_b",
         u["xmin"].alias("u_xmin"),

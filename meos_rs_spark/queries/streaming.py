@@ -342,7 +342,7 @@ def _accumulate_extent(state, pdf_iter):
     max_ts_us) GroupState and return the updated triple. ONE
     implementation so the replay twin and the evicting deployment recipe
     cannot drift (r9 review find — same hazard class as the J5 grid
-    joins' shared `_adaptive_cell_stats`)."""
+    joins' shared `_grid_overlap_pairs`)."""
     if state.exists:
         n, tmin, tmax = state.get
     else:

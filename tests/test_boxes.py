@@ -5,6 +5,7 @@ and shifted time boxes — plus the int_to_tbox canonical WKT
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from meos_rs_spark.functions.boxes import (
@@ -170,25 +171,12 @@ def test_salt_chunks_clamps_before_narrowing(spark):
     """The chunk-salt clamp must happen in LONG before the int cast: an
     extreme hottest-cell count would otherwise overflow the cast under
     ANSI exactly on the most skewed inputs (r16 self-review find). Driven
-    by substituting a huge literal for the census maximum."""
-    import math
-
+    by a huge literal standing in for the census maximum."""
     from pyspark.sql import functions as F
 
-    from meos_rs_spark.queries.boxes import _OVERLAP_CHUNKS_MAX, _SALT_TARGET_PAIRS
+    from meos_rs_spark.queries.boxes import _OVERLAP_CHUNKS_MAX, _chunks_for_max
 
-    # the same expression _salt_chunks builds, with m = 2^62
-    m = F.lit(1 << 62).cast("bigint")
-    k = (
-        F.greatest(
-            F.lit(1).cast("bigint"),
-            F.least(
-                F.lit(_OVERLAP_CHUNKS_MAX).cast("bigint"),
-                F.ceil(F.coalesce(m, F.lit(0)).cast("double") / math.sqrt(_SALT_TARGET_PAIRS)),
-            ),
-        )
-        .cast("int")
-    )
+    k = _chunks_for_max(F.lit(1 << 62).cast("bigint"))
     assert spark.range(1).select(k.alias("k")).collect()[0].k == _OVERLAP_CHUNKS_MAX
 
 
@@ -202,3 +190,23 @@ def test_salt_chunks_is_one_on_uniform_cells(spark):
     )
     k = spark.range(1).select(_salt_chunks(cells, "cellx", "celly").alias("k")).collect()[0].k
     assert k == 1
+
+
+@pytest.mark.parametrize("name", ["box_stbox_overlap_join", "box_stbox_overlap_banded"])
+def test_overlap_joins_match_the_oracle_when_salted(spark, monkeypatch, name):
+    """The fixtures are uniform, so the adaptive salt reads K = 1 and the
+    parity suite never splits a cell into chunks. A one-pair target forces
+    K > 1 (K = 15 at SF_SMOKE): each pair must still meet exactly once."""
+    from meos_rs_spark.queries import boxes
+    from meos_rs_spark.registry import load_registry
+    from tests.conftest import SF_SMOKE
+    from tests.oracle import compare, duck_connection
+
+    monkeypatch.setattr(boxes, "_SALT_TARGET_PAIRS", 1)
+    spec = load_registry()[name]
+    duck = duck_connection(SF_SMOKE)
+    try:
+        issues = compare(spec.fn(spark, SF_SMOKE), duck.sql(spec.oracle).df(), name)
+    finally:
+        duck.close()
+    assert not issues, "\n".join(issues)

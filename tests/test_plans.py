@@ -8,6 +8,10 @@ product, and scans prune columns.
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from meos_rs_spark.registry import load_registry
 from tests.conftest import SF_SMOKE
 
@@ -42,7 +46,7 @@ def test_lsh_has_no_cartesian_product(spark):
     for name in ("dedup_minhash_lsh", "sim_ann_lsh", "box_stbox_overlap_join"):
         plan = _plan(spark, name)
         assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan or name == "box_stbox_overlap_join", name
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_minhash_intermediates_are_staged_not_cached(spark):
@@ -370,15 +374,25 @@ def test_tfloat_sync_single_pair_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") <= 2, plan[:3000]
 
 
-def test_banded_overlap_join_shape(spark):
-    """The banded J5 variant's 100 TB shape (r9): an equi-join on the 3D
-    cell + chunk keys (never cartesian/BNLJ), and the serialization guard —
+@pytest.mark.parametrize("name", ["box_stbox_overlap_join", "box_stbox_overlap_banded"])
+def test_banded_overlap_join_shape(spark, name):
+    """Both J5 grid joins' 100 TB shape (r9): an equi-join on the cell +
+    chunk keys (never cartesian/BNLJ), and the serialization guard —
     explicit-count (AQE-coalesce-exempt) exchanges feeding the join on both
     sides plus the pre-explode vbox exchange, visible as user-specified
     repartitions in the plan. Without them the few-MB cell exchanges
     coalesce to ~1 task and the candidate refinement runs serially
-    (measured 40s at sf0.1 — SCALE_r09.md §1)."""
-    plan = _plan(spark, "box_stbox_overlap_banded")
+    (measured 40s at sf0.1 — SCALE_r09.md §1).
+
+    Built at the driver's default 200 shuffle partitions: at the suite's 8,
+    equal to its parallelism, Spark drops the pre-explode repartition(8,
+    key) as redundant over the box aggregate's own hashpartitioning(key, 8)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        plan = _plan(spark, name)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # an equi join (AQE may pick BHJ at toy scale; SMJ/SHJ at real scale)
@@ -387,6 +401,16 @@ def test_banded_overlap_join_shape(spark):
     # join sides — REPARTITION_BY_NUM is the plan marker for an
     # explicit-count repartition
     assert plan.count("REPARTITION_BY_NUM") >= 3
+    repartitions = [line for line in plan.splitlines() if "REPARTITION_BY_NUM" in line]
+    assert any("hashpartitioning(mmsi#" in line for line in repartitions), name
+    # one distinct keyed exchange per join side (the banded plan repeats
+    # them under its two union legs)
+    join_sides = {
+        re.sub(r"#\d+L?", "", line.split("hashpartitioning(")[1].split(")")[0])
+        for line in repartitions
+        if ", ca#" in line and ", cb#" in line
+    }
+    assert len(join_sides) == 2, (name, join_sides)
 
 
 def test_value_envelope_is_scan_pushed_and_parse_free(spark):

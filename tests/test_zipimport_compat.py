@@ -16,19 +16,32 @@ import zipimport
 import meos_rs_spark._zipimport_compat as compat
 
 MOD = "meos_zipimport_probe_mod"
+PKG = "meos_zipimport_probe_pkg"
 
 
-def _write_archive(path, body: str) -> None:
+def _write_archive(path, body: str, *pkg_modules: str) -> None:
     with zipfile.ZipFile(path, "w") as zf:
         zf.writestr(f"{MOD}.py", body)
+        zf.writestr(f"{PKG}/__init__.py", "")
+        for name in ("sub", *pkg_modules):
+            zf.writestr(f"{PKG}/{name}.py", "")
 
 
 def test_unchanged_archive_is_read_once_and_a_rewrite_is_seen(tmp_path, monkeypatch):
+    """Two importers of one archive (its root and a package directory in
+    it, as a worker holds for pyspark.zip) share one directory read."""
     archive = tmp_path / "probe.zip"
     _write_archive(archive, "VALUE = 1\n")
     monkeypatch.syspath_prepend(str(archive))
-    monkeypatch.delitem(sys.modules, MOD, raising=False)
+    modules = (MOD, PKG, f"{PKG}.sub", f"{PKG}.late")
+    for name in modules:
+        monkeypatch.delitem(sys.modules, name, raising=False)
     assert importlib.import_module(MOD).VALUE == 1
+    importlib.import_module(f"{PKG}.sub")
+    importers = [str(archive), str(archive / PKG)]
+    assert all(
+        isinstance(sys.path_importer_cache.get(p), zipimport.zipimporter) for p in importers
+    )
 
     reads = []
     real_read = zipimport._read_directory
@@ -43,14 +56,19 @@ def test_unchanged_archive_is_read_once_and_a_rewrite_is_seen(tmp_path, monkeypa
         importlib.invalidate_caches()
     assert len(reads) <= 1, f"unchanged archive re-read {len(reads)} times"
 
-    # a changed module of a different size: the next invalidate must re-read
-    _write_archive(archive, "VALUE = 22222\nEXTRA = 'grown'\n")
+    # a changed module of a different size and a module new to the
+    # package: the next invalidate must re-read, and neither importer may
+    # keep the stale directory
+    _write_archive(archive, "VALUE = 22222\nEXTRA = 'grown'\n", "late")
     importlib.invalidate_caches()
     del sys.modules[MOD]
     fresh = importlib.import_module(MOD)
     assert (fresh.VALUE, fresh.EXTRA) == (22222, "grown")
-    sys.modules.pop(MOD, None)
-    sys.path_importer_cache.pop(str(archive), None)
+    importlib.import_module(f"{PKG}.late")
+    for name in modules:
+        sys.modules.pop(name, None)
+    for p in importers:
+        sys.path_importer_cache.pop(p, None)
 
 
 def test_archive_that_cannot_be_stat_ed_is_re_read(tmp_path, monkeypatch):

@@ -21,10 +21,9 @@ bottleneck signature that 32 fast local cores hide behind wall-clock
 (r8 VERDICT item 4).
 
 Since r10 any query whose stock ×10 share exceeds ``ADV_SHARE_TRIGGER``
-earns an extra ×10 leg under a 2 MB ``advisoryPartitionSizeInBytes`` (the
-one-off ``tools/probe_advisory.py`` demo made standing, r9 VERDICT item 5):
-at toy scale AQE legitimately coalesces a small exchange into one
-partition, so a share near 1.0 is ambiguous. If the 2 MB advisory collapses
+earns an extra ×10 leg under a 2 MB ``advisoryPartitionSizeInBytes`` (r9
+VERDICT item 5): at toy scale AQE legitimately coalesces a small exchange
+into one partition, so a share near 1.0 is ambiguous. If the 2 MB advisory collapses
 the share the concentration was the coalescing artifact and the skew flag
 is suppressed; a share that PERSISTS under the advisory is a real
 partitioning defect and flags. Every sweep row self-classifies — no
