@@ -251,4 +251,6 @@ def stage(df: DataFrame, name: str) -> DataFrame:
     # or faster AND ~30% smaller — at 100 TB the staged intermediate's
     # scratch IO (write once, read per consumer) is the cost that matters
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
-    return spark.read.parquet(path)
+    # read back with the schema just written: inferring it would run a
+    # one-task job per call to re-read a footer this process wrote
+    return spark.read.schema(df.schema).parquet(path)

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkException
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs every entry point applies (idempotent).
@@ -64,12 +65,14 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
+        except PySparkException as e:
+            # Spark's own refusal (an unmodifiable conf, classic or Connect);
+            # any other error is a bug and propagates.
             if key in _REQUIRED_CONFS:
                 raise RuntimeError(
                     f"required conf {key}={value} could not be applied; "
                     "the events reader and timestamp normalization depend on it"
-                )
+                ) from e
             # Optional perf confs (AQE/Arrow): degrade gracefully.
     return spark
 

@@ -384,15 +384,13 @@ def test_banded_overlap_join_shape(spark, name):
     coalesce to ~1 task and the candidate refinement runs serially
     (measured 40s at sf0.1 — SCALE_r09.md §1).
 
-    Built at the driver's default 200 shuffle partitions: at the suite's 8,
-    equal to its parallelism, Spark drops the pre-explode repartition(8,
-    key) as redundant over the box aggregate's own hashpartitioning(key, 8)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
-    try:
-        plan = _plan(spark, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Built at the driver's default 200 shuffle partitions, on a new session
+    so the shared one's conf is never touched: at the suite's 8, equal to
+    its parallelism, Spark drops the pre-explode repartition(8, key) as
+    redundant over the box aggregate's own hashpartitioning(key, 8)."""
+    driver_like = spark.newSession()
+    driver_like.conf.set("spark.sql.shuffle.partitions", "200")
+    plan = _plan(driver_like, name)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # an equi join (AQE may pick BHJ at toy scale; SMJ/SHJ at real scale)
