@@ -158,18 +158,6 @@ def stbox_z_wkt_sql(p: str, dialect: str) -> str:
     )
 
 
-def stbox_contains_point(box: Column, lon: Column, lat: Column, ts: Column) -> Column:
-    """contains_stbox_tpoint (stbox.rs:83-85): box ⊇ a temporal point."""
-    return (
-        (box["xmin"] <= lon)
-        & (lon <= box["xmax"])
-        & (box["ymin"] <= lat)
-        & (lat <= box["ymax"])
-        & (box["tmin"] <= ts)
-        & (ts <= box["tmax"])
-    )
-
-
 def tbox_union(a: Column, b: Column) -> Column:
     """Bounding union (union_tbox_tbox semantics: smallest box containing
     both — MEOS requires overlap for the exact union; the bounding form is

@@ -95,11 +95,6 @@ def money_sum_sql(expr: str, dialect: str = "spark") -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE)"
 
 
-def money_avg_sql(expr: str, dialect: str = "spark") -> str:
-    """Order-independent AVG: exact decimal sum, then one double division."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) / COUNT({expr})"
-
-
 def money_sum(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast("decimal(18,2)")).cast("double")
@@ -108,16 +103,6 @@ def money_sum(col: str | Column) -> Column:
 def money_avg(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast("decimal(18,2)")).cast("double") / F.count(c)
-
-
-# --- generic double aggregation (round first, then exact decimal sum) ------
-
-
-def rounded_sum_sql(expr: str, scale: int = 6) -> str:
-    """SUM of arbitrary doubles: ROUND (half-away-from-zero in both engines)
-    → DECIMAL (exact, associative) → DOUBLE. Deterministic under any shuffle
-    order as long as the per-row double is computed identically."""
-    return f"CAST(SUM(CAST(ROUND({expr}, {scale}) AS DECIMAL(28,{scale}))) AS DOUBLE)"
 
 
 # --- float → string rendering ---------------------------------------------

@@ -127,67 +127,20 @@ def fan_out(df: DataFrame, *keys: str, force: bool = False) -> DataFrame:
     exchange whose few-MB output AQE coalesces to ~1 partition — a hazard
     independent of the SCAN's partition count, so the n < par guard tests
     the wrong thing for them (r8 review find). The forced exchange replaces
-    the groupBy's, so no extra shuffle appears in the plan. Under Spark
-    Connect (no sparkContext) the forced path must NOT degrade to a no-op
-    — the AQE-serialization hazard it exists for is execution-side, not
-    classic-API-side — so it falls back to the session's shuffle-partition
-    count, which repartition(n, ...) makes equally AQE-coalesce-exempt
-    (r8 ADVICE item 1)."""
-    spark = df.sparkSession
-    if force:
-        # No .rdd probe here: the scan's split count is irrelevant to the
-        # group-exchange hazard, and .rdd raises under Connect.
-        try:
-            par = spark.sparkContext.defaultParallelism
-        except Exception:
-            # shuffle.partitions may be non-numeric ('auto' on managed
-            # platforms) — fall back to the engine default rather than
-            # crashing the very environment this branch exists for
-            try:
-                par = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-            except (ValueError, TypeError):
-                par = 200
-        return df.repartition(par, *keys)
-    try:
-        # .rdd / sparkContext raise under Spark Connect; the unforced probe
-        # is a local-mode fixture mitigation only, so degrade to a no-op
-        # there (r7 ADVICE 3)
-        par = spark.sparkContext.defaultParallelism
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    if n < par:
+    the groupBy's, so no extra shuffle appears in the plan."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if force or df.rdd.getNumPartitions() < par:
         df = df.repartition(par, *keys)
     return df
 
 
 def side_table_name(base: str, sf_dir: str) -> str:
     """Staging-table name keyed by fixture dir — the default for ANY staged
-    table built from a specific fixture scale. Two hazards both require it:
-    executor-side caches (functions/quantize._load_side) key by path, so a
-    session running one query at two scales must stage two tables; and a
-    second-scale build overwriting a fixed name's part-files breaks scans
-    the first scale's already-returned DataFrame resolved (ADVICE r6)."""
+    table built from a specific fixture scale: a second-scale build
+    overwriting a fixed name's part-files breaks scans the first scale's
+    already-returned DataFrame resolved (ADVICE r6)."""
     key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     return f"{base}_{key}"
-
-
-def dir_fingerprint(path: str):
-    """Cheap change detector for a staged table dir: (name, size, mtime_ns)
-    per DATA file — ``_SUCCESS``/dot-metadata excluded, since any parquet
-    payload change always touches a data file and metadata-only touches
-    must not read as content changes. Local paths only; None on unreadable
-    dirs (URI-rooted staging relies on sf-keyed names for freshness).
-    Used by the executor-side side-table caches (functions/quantize)."""
-    try:
-        return tuple(
-            (f, st.st_size, st.st_mtime_ns)
-            for f in sorted(os.listdir(path))
-            if not f.startswith(("_", "."))
-            for st in (os.stat(os.path.join(path, f)),)
-        )
-    except OSError:
-        return None
 
 
 def adopt_app_dir(app_dir: str, root: str) -> None:
@@ -202,14 +155,8 @@ def adopt_app_dir(app_dir: str, root: str) -> None:
 
 
 def staged_table_path(spark, name: str) -> str:
-    """The on-disk path ``stage(df, name)`` writes to in this session.
-
-    Public so side-input readers (functions/quantize.py) can locate a staged
-    table from inside an executor-side kernel: the path is deterministic
-    given the session (staging root + applicationId namespace + name), which
-    is exactly what makes a staged K-row quantizer usable as a per-worker
-    side file without shipping it through a join.
-    """
+    """The on-disk path ``stage(df, name)`` writes to in this session:
+    staging root + applicationId namespace + name."""
     root = spark.conf.get("spark.meos.staging.dir", None)
     if not root:
         root = os.path.join(tempfile.gettempdir(), "meos_rs_staging")

@@ -223,6 +223,18 @@ def dedup_monotonic(df: DataFrame, key: str = "mmsi", ts: str = "ts", tiebreak: 
 
 DEDUP_QUALIFY = "QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1"
 
+#: ``posits`` (XY envelope) plus ``dedup``: one posit per (mmsi, ts), the
+#: lowest event_id — the DuckDB twin of ``dedup_monotonic``. Consumers of
+#: assembled trajectories read FROM dedup, never posits: on duplicate-
+#: timestamp data the raw-posits twin diverges (r10 review find). The
+#: envelope applies BEFORE the dedup, so a NULL-coordinate row can never
+#: win a (mmsi, ts) contest and then vanish.
+DEDUP_XY_CTE = f"""{POSITS_XY_CTE},
+dedup AS (
+  SELECT * FROM posits
+  {DEDUP_QUALIFY}
+)"""
+
 
 # --- P5: truncate group to max size ---------------------------------------
 
@@ -398,13 +410,6 @@ def path_length(traj: Column, scale: int = 6) -> Column:
         # (29,s) which would break the fold's type contract
         lambda acc, d: (acc + F.round(d, scale).cast(dt)).cast(dt),
     ).cast("double")
-
-
-def avg_speed(traj: Column) -> Column:
-    """Length / duration (L2 ``tpoint_speed`` aggregate form), NULL for
-    zero-duration sequences."""
-    dur = duration_seconds(traj)
-    return F.when(dur > 0, path_length(traj) / dur)
 
 
 # --- rendering helpers -----------------------------------------------------

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meos_rs_spark.functions.determinism import fmt6_sql
-from meos_rs_spark.functions.trajectory import POSITS_XY_CTE, dedup_monotonic, posits_xy
+from meos_rs_spark.functions.trajectory import DEDUP_XY_CTE, dedup_monotonic, posits_xy
 from meos_rs_spark.registry import register
 
 MIN_TRIP_SIZE = 10
@@ -32,11 +32,7 @@ LIMIT = 100
 # measured cost on assembly-shaped bodies is ~1.25x pre-shuffle eval
 # (PREFLIGHT_r13 "Bench"), priced by the same semantics the oracle pays.
 _ORACLE = f"""
-WITH {POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-)
+WITH {DEDUP_XY_CTE}
 SELECT mmsi,
        count(*) AS len,
        min(ts) AS t_start,

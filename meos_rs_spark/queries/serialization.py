@@ -38,6 +38,7 @@ from meos_rs_spark.functions.serde import (
     traj_wkb,
 )
 from meos_rs_spark.functions.trajectory import (
+    DEDUP_XY_CTE,
     POSITS_XY_CTE,
     point_wkt,
     point_wkt_duck,
@@ -105,11 +106,7 @@ _MF_LIMIT = 20  # first N instants per vessel keeps the JSON bounded
     # XY envelope (r12): MF-JSON coordinates derive from lon/lat — a
     # NULL-coordinate posit has no pair to render; both legs drop it
     oracle=f"""
-WITH {POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-),
+WITH {DEDUP_XY_CTE},
 head AS (
   SELECT * FROM dedup
   QUALIFY row_number() OVER (PARTITION BY mmsi ORDER BY ts, event_id) <= {_MF_LIMIT}
@@ -189,11 +186,7 @@ _MFJSON_SCHEMA = (
     "serde_mfjson_ingest",
     # XY envelope via the serde_mfjson render it ingests (r12)
     oracle=f"""
-WITH {POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-),
+WITH {DEDUP_XY_CTE},
 head AS (
   SELECT * FROM dedup
   QUALIFY row_number() OVER (PARTITION BY mmsi ORDER BY ts, event_id) <= {_MF_LIMIT}
@@ -265,11 +258,7 @@ _WKB_PTS = 4  # instants per sequence (bounded output, matches serde_wkt_forms)
 @register(
     "serde_wkb_roundtrip",
     oracle=f"""
-WITH {POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-),
+WITH {DEDUP_XY_CTE},
 head AS (
   SELECT * FROM dedup
   QUALIFY row_number() OVER (PARTITION BY mmsi ORDER BY ts, event_id) <= {_WKB_PTS}
@@ -336,11 +325,7 @@ _N_PTS = 4  # points per rendered form (bounded output)
     "serde_wkt_forms",
     # XY envelope (r12): every WKT form renders the coordinates
     oracle=f"""
-WITH {POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-),
+WITH {DEDUP_XY_CTE},
 head AS (
   SELECT * FROM dedup
   QUALIFY row_number() OVER (PARTITION BY mmsi ORDER BY ts, event_id) <= {_N_PTS}
@@ -393,11 +378,7 @@ _GAP_US = 21_600_000_000  # 6h session gap for the sequence-set form
     "serde_wkt_seqset",
     # XY envelope (r12): session sequences render the coordinates
     oracle=f"""
-WITH {POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-),
+WITH {DEDUP_XY_CTE},
 flagged AS (
   SELECT mmsi, ts, lon, lat,
          CASE WHEN lag(ts) OVER w IS NULL

@@ -72,6 +72,29 @@ def _duck_cosine(a: str, b: str) -> str:
     )
 
 
+def _probe_topk(
+    scored: DataFrame, carry: list[str], field: str, score: str, top: int, *, desc: bool
+) -> DataFrame:
+    """The shared tail of the map-side probe kernels: explode each vector's
+    kernel struct ``s`` (``s.pids`` beside the per-probe ``s.<field>``)
+    into (probe_id, vec_id, *carry, score) pairs, drop the self pairs, and
+    keep each probe's first ``top`` by (score, vec_id)."""
+    pairs = scored.select(
+        "vec_id",
+        *carry,
+        F.explode(
+            F.arrays_zip(F.col("s.pids").alias("probe_id"), F.col(f"s.{field}").alias(score))
+        ).alias("p"),
+    ).select(F.col("p.probe_id").alias("probe_id"), "vec_id", *carry, F.col(f"p.{score}").alias(score))
+    w = Window.partitionBy("probe_id").orderBy(F.col(score).desc() if desc else F.col(score), "vec_id")
+    return (
+        pairs.filter(F.col("vec_id") != F.col("probe_id"))
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= top)
+        .select("probe_id", "vec_id", *carry, score)
+    )
+
+
 # --- brute-force cosine top-k (exactness baseline) -------------------------
 
 
@@ -103,27 +126,8 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first-N_PROBES-valid rows the broadcast side selected); values stay
     # bit-equal to the oracle's sqrt(list_dot_product(v,v)) factors
     scorer = make_probe_cosines_udf(source_cents_spec(sf_dir, N_PROBES, DIM))
-    scored = (
-        _corpus(spark, sf_dir)
-        .select("vec_id", "label", scorer("embedding").alias("s"))
-        .select(
-            "vec_id",
-            "label",
-            F.explode(
-                F.arrays_zip(
-                    F.col("s.pids").alias("probe_id"), F.col("s.cosines").alias("cosine")
-                )
-            ).alias("p"),
-        )
-        .select(F.col("p.probe_id").alias("probe_id"), "vec_id", "label", F.col("p.cosine").alias("cosine"))
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        scored.filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= TOP_K)
-        .select("probe_id", "vec_id", "label", "cosine")
-    )
+    scored = _corpus(spark, sf_dir).select("vec_id", "label", scorer("embedding").alias("s"))
+    return _probe_topk(scored, ["label"], "cosines", "cosine", TOP_K, desc=True)
 
 
 # --- sign-LSH bucketed ANN (the scale path) --------------------------------
@@ -342,27 +346,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_cents_spec(sf_dir, N_PROBES, DIM),
         nprobe=NPROBE,
     )
-    cand = (
-        _corpus(spark, sf_dir)
-        .select("vec_id", "label", scorer("embedding").alias("s"))
-        .select(
-            "vec_id",
-            "label",
-            F.explode(
-                F.arrays_zip(
-                    F.col("s.pids").alias("probe_id"), F.col("s.cosines").alias("cosine")
-                )
-            ).alias("p"),
-        )
-        .select(F.col("p.probe_id").alias("probe_id"), "vec_id", "label", F.col("p.cosine").alias("cosine"))
-        .filter(F.col("vec_id") != F.col("probe_id"))
-    )
-    wk = Window.partitionBy("probe_id").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        cand.withColumn("__rnk", F.row_number().over(wk))
-        .filter(F.col("__rnk") <= IVF_TOPK)
-        .select("probe_id", "vec_id", "label", "cosine")
-    )
+    scored = _corpus(spark, sf_dir).select("vec_id", "label", scorer("embedding").alias("s"))
+    return _probe_topk(scored, ["label"], "cosines", "cosine", IVF_TOPK, desc=True)
 
 
 # --- k-means Lloyd iteration (the IVF training step) ------------------------
@@ -693,11 +678,7 @@ QUALIFY row_number() OVER (PARTITION BY probe_id ORDER BY approx_d2, vec_id) <= 
     f"both engines fold identically.",
 )
 def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from meos_rs_spark.functions.quantize import (
-        make_pq_adc_udf,
-        source_cents_spec,
-        source_pq_cb_spec,
-    )
+    from meos_rs_spark.functions.quantize import make_pq_adc_udf, source_cents_spec
 
     emb = _corpus(spark, sf_dir)
     # one Arrow pass per corpus vector: assign all PQ_M codes AND total the
@@ -708,30 +689,13 @@ def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rebuilt the probe LUT chain once per subspace (4 broadcast builds ×
     # (probe scan + codebook broadcast + Arrow eval) per run).
     adc = make_pq_adc_udf(
-        source_pq_cb_spec(sf_dir, PQ_K, DIM, PQ_M, PQ_SUBDIM),
+        source_cents_spec(sf_dir, PQ_K, DIM),
         source_cents_spec(sf_dir, N_PROBES, DIM),
         n_sub=PQ_M,
         subdim=PQ_SUBDIM,
     )
-    scored = (
-        emb.select("vec_id", adc("embedding").alias("s"))
-        .select(
-            "vec_id",
-            F.explode(
-                F.arrays_zip(
-                    F.col("s.pids").alias("probe_id"), F.col("s.d2s").alias("approx_d2")
-                )
-            ).alias("p"),
-        )
-        .select(F.col("p.probe_id").alias("probe_id"), "vec_id", F.col("p.approx_d2").alias("approx_d2"))
-    )
-    topw = Window.partitionBy("probe_id").orderBy("approx_d2", "vec_id")
-    return (
-        scored.filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("__rn", F.row_number().over(topw))
-        .filter(F.col("__rn") <= TOP_K)
-        .select("probe_id", "vec_id", "approx_d2")
-    )
+    scored = emb.select("vec_id", adc("embedding").alias("s"))
+    return _probe_topk(scored, [], "d2s", "approx_d2", TOP_K, desc=False)
 
 
 # --- PageRank over the kNN graph (iterative power method) -------------------

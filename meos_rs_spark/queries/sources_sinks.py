@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from meos_rs_spark.functions.trajectory import (
+    DEDUP_QUALIFY,
+    DEDUP_XY_CTE,
     POSITS_CTE,
     POSITS_XY_CTE,
     assemble,
@@ -105,11 +107,7 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "snk_jsonl_trips",
     oracle=f"""
-WITH {POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-)
+WITH {DEDUP_XY_CTE}
 SELECT mmsi AS id, count(*) AS n_instants, epoch_us(min(ts)) AS start_us
 FROM dedup GROUP BY mmsi HAVING count(*) >= 2
 """,
@@ -154,7 +152,7 @@ merged AS (
   -- lat pinned a value-ordered rule the engine never implemented —
   -- latent while the fixture has no duplicate (mmsi, ts) groups)
   SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
+  {DEDUP_QUALIFY}
 )
 SELECT mmsi, count(*) AS n_points, min(ts) AS t_start, max(ts) AS t_end
 FROM merged GROUP BY mmsi

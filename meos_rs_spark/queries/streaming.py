@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.errors import PySparkAttributeError
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -131,8 +130,7 @@ def _backlog_bytes(spark: SparkSession, sf_dir: str) -> int:
     Hadoop FileSystem API so an object-store deployment sizes correctly
     instead of silently flooring at ``_STREAM_STATE_MIN`` (r16 VERDICT
     item 2 — the old ``os.path``-only probe read 0 for any non-local
-    fixture location). A local OSError or a URI path under Spark Connect
-    (no JVM to reach Hadoop through) → 0 (the floor applies); a Hadoop
+    fixture location). A local OSError → 0 (the floor applies); a Hadoop
     FileSystem error raises."""
     import os
 
@@ -151,14 +149,9 @@ def _backlog_bytes(spark: SparkSession, sf_dir: str) -> int:
         except OSError:
             pass
         return 0
-    try:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-    except PySparkAttributeError:  # Spark Connect: no JVM handle
-        return 0
-    Path = jvm.org.apache.hadoop.fs.Path
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     ev = Path(sf_dir.rstrip("/") + "/events.parquet")
-    fs = ev.getFileSystem(hconf)
+    fs = ev.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.isFile(ev):
         return fs.getFileStatus(ev).getLen()
     root = Path(sf_dir)

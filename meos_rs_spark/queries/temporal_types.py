@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from meos_rs_spark.functions.trajectory import POSITS_V_CTE, POSITS_XY_CTE, dedup_monotonic, posits_v, posits_xy
+from meos_rs_spark.functions.trajectory import DEDUP_QUALIFY, POSITS_V_CTE, POSITS_XY_CTE, dedup_monotonic, posits_v, posits_xy
 from meos_rs_spark.registry import register
 
 # fixed mid-fixture probe instant for value-at-timestamp
@@ -35,7 +35,7 @@ _PROBE_TS = "2024-01-15 00:00:00"
 WITH {POSITS_V_CTE},
 dedup AS (
   SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
+  {DEDUP_QUALIFY}
 ),
 tint AS (
   SELECT mmsi, ts, CAST(floor(lon) AS BIGINT) AS iv,

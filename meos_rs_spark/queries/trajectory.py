@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from meos_rs_spark.functions.trajectory import (
+    DEDUP_XY_CTE,
     POSITS_V_CTE,
     POSITS_XY_CTE,
     assemble,
@@ -44,26 +45,9 @@ MIN_TRIP, MAX_TRIP = 5, 80
 RESAMPLE_STEP_US = 21_600_000_000
 RESAMPLE_MAX_SEGMENT_US = 366 * 86_400_000_000
 
-#: posits_xy + the monotonic dedup every assemble()-based Spark leg applies
-#: (one row per (mmsi, ts), lowest event_id wins — functions.trajectory.
-#: dedup_monotonic). Any oracle whose Spark twin goes through assemble()
-#: or dedup_monotonic MUST read FROM dedup, not posits: on duplicate-
-#: timestamp data the raw-posits twin diverges (r10 review find — the
-#: r7 traj_equality hazard class). The envelope applies BEFORE
-#: dedup/truncate so a NULL-coordinate row can never win a (mmsi, ts)
-#: dedup contest and then vanish — both legs see the identical surviving
-#: set. (The raw _DEDUP_CTE/_ASSEMBLED_CTE variants lost their last
-#: consumers to the r13/r14 envelope sweep and were removed.)
-_DEDUP_XY_CTE = f"""
-{POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-)
-"""
-
+#: DEDUP_XY_CTE truncated to each vessel's first MAX_TRIP posits.
 _ASSEMBLED_XY_CTE = f"""
-{_DEDUP_XY_CTE},
+{DEDUP_XY_CTE},
 trunc AS (
   SELECT * FROM dedup
   QUALIFY row_number() OVER (PARTITION BY mmsi ORDER BY ts, event_id) <= {MAX_TRIP}
@@ -357,7 +341,7 @@ def traj_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FROM dedup, not posits: the Spark leg assembles (dedup_monotonic), so
     # n_instants/subtype must count deduped instants (r10 review find)
     oracle=f"""
-WITH {_DEDUP_XY_CTE}
+WITH {DEDUP_XY_CTE}
 SELECT mmsi,
        min(ts) AS start_ts,
        max(ts) AS end_ts,
@@ -394,7 +378,7 @@ def traj_accessors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicate-ts posit pair must not contribute a zero-duration segment.
     # XY envelope (r12): a NULL-coordinate posit has no segment geometry.
     oracle=f"""
-WITH {_DEDUP_XY_CTE},
+WITH {DEDUP_XY_CTE},
 segs AS (
   SELECT mmsi, ts,
          sqrt( (lon - lag(lon) OVER w) * (lon - lag(lon) OVER w)
@@ -430,7 +414,7 @@ def traj_length_speed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engine-arbitrary tie — dedup makes the bracketing instant unique in
     # BOTH legs (r10 review find; traj_resample_linear already did this)
     oracle=f"""
-WITH {_DEDUP_XY_CTE},
+WITH {DEDUP_XY_CTE},
 probe AS (
   -- midpoint via integer micros: engines disagree on interval/2 semantics
   SELECT mmsi,
@@ -1471,11 +1455,7 @@ def traj_twavg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "traj_resample_linear",
     oracle=f"""
-WITH {POSITS_XY_CTE},
-dedup AS (
-  SELECT * FROM posits
-  QUALIFY row_number() OVER (PARTITION BY mmsi, ts ORDER BY event_id) = 1
-),
+WITH {DEDUP_XY_CTE},
 segs AS (
   SELECT mmsi, lon, lat,
          epoch_us(ts) AS p_us,
@@ -2162,7 +2142,7 @@ def traj_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bracketing over dedup for the same tie-uniqueness reason as
     # traj_value_at_time (r10 review find); XY envelope as there (r12)
     oracle=f"""
-WITH {_DEDUP_XY_CTE},
+WITH {DEDUP_XY_CTE},
 probe AS (
   SELECT mmsi,
          CASE WHEN mmsi % 2 = 0 THEN 'linear' ELSE 'step' END AS interp,

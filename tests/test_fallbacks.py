@@ -1,5 +1,5 @@
-"""Narrow fallbacks: the two runtime seams that used to swallow any
-exception now swallow only the case they exist for."""
+"""Narrow fallbacks: ``prepare_session`` swallows only a Spark refusal of
+an optional conf, and ``_backlog_bytes`` swallows nothing on a URI path."""
 
 from __future__ import annotations
 
@@ -55,8 +55,12 @@ class _ConnectSession:
         )
 
 
-def test_backlog_bytes_is_zero_without_a_jvm():
-    assert _backlog_bytes(_ConnectSession(), "s3://bucket/fixture") == 0
+def test_backlog_bytes_raises_without_a_jvm():
+    """A session with no JVM handle (Spark Connect, which the package does
+    not support) must not size the backlog as 0 and floor the state
+    partitions silently."""
+    with pytest.raises(PySparkAttributeError):
+        _backlog_bytes(_ConnectSession(), "s3://bucket/fixture")
 
 
 class _BrokenFileSystemSession:

@@ -1,6 +1,6 @@
 """Every registered query with an oracle must match DuckDB exactly —
 the local twin of the driver's CORRECTNESS gate, run at sf0.001 for speed
-(set SPARK_GRAFT_ORACLE_DIR=/root/testdata/sf0.01 for the full check)."""
+(point SPARK_GRAFT_SMOKE_DIR at the sf0.01 fixture for the full check)."""
 
 from __future__ import annotations
 

@@ -1,11 +1,15 @@
 """Map-side quantizer kernels (functions/quantize.py): bit-equivalence with
 the crossJoin+window argmin shape they replaced, oracle-matching tie-breaks,
-and side-table cache freshness."""
+the non-finite input check, and side cache freshness."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -13,13 +17,21 @@ from pyspark.sql.functions import broadcast
 
 from meos_rs_spark.functions import quantize
 from meos_rs_spark.functions.embeddings import seq_dot
-from meos_rs_spark.functions.staging import stage, staged_table_path
 
 
-def _write_cents(spark, rows, name):
-    df = spark.createDataFrame(rows, "cent_id long, ce array<float>")
-    stage(df, name)
-    return staged_table_path(spark, name)
+def _write_cents(tmp_path, rows):
+    """Write (vec_id, embedding) rows as ``embeddings.parquet`` under
+    ``tmp_path``; return the spec whose k keeps every row (all ids < k)."""
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([i for i, _ in rows], pa.int64()),
+                "embedding": pa.array([v for _, v in rows], pa.list_(pa.float32())),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    return quantize.source_cents_spec(str(tmp_path), max(i for i, _ in rows) + 1, len(rows[0][1]))
 
 
 def _rng_vecs(n, dim, seed):
@@ -28,12 +40,12 @@ def _rng_vecs(n, dim, seed):
 
 
 @pytest.mark.parametrize("metric", ["l2", "cos"])
-def test_nearest_matches_crossjoin_window_shape(spark, metric):
+def test_nearest_matches_crossjoin_window_shape(spark, metric, tmp_path):
     dim, k = 16, 5
     vecs = spark.createDataFrame(_rng_vecs(200, dim, 7), "vec_id long, embedding array<float>")
     cents_rows = [(int(i), v) for i, v in _rng_vecs(k, dim, 11)]
-    path = _write_cents(spark, cents_rows, f"q_cents_{metric}")
-    udf = quantize.make_nearest_centroid_udf(path, metric=metric)
+    spec = _write_cents(tmp_path, cents_rows)
+    udf = quantize.make_nearest_centroid_udf(spec, metric=metric)
     got = {r.vec_id: r.c for r in vecs.select("vec_id", udf("embedding").alias("c")).collect()}
 
     cents = spark.createDataFrame(cents_rows, "cent_id long, ce array<float>")
@@ -58,151 +70,47 @@ def test_nearest_matches_crossjoin_window_shape(spark, metric):
     assert got == ref
 
 
-def test_nearest_tie_breaks_to_lowest_cent_id(spark):
+def test_nearest_tie_breaks_to_lowest_cent_id(spark, tmp_path):
     # two IDENTICAL centroids: the window's ORDER BY (score, cent_id) keeps
-    # the lower id — the kernel's strict-inequality ascending scan must too
+    # the lower id — the kernel's first-extreme argmin/argmax must too
     v = [float(x) for x in range(8)]
-    path = _write_cents(spark, [(3, v), (1, v)], "q_cents_tie")
+    spec = _write_cents(tmp_path, [(3, v), (1, v)])
     vecs = spark.createDataFrame([(0, v)], "vec_id long, embedding array<float>")
     for metric in ("l2", "cos"):
-        udf = quantize.make_nearest_centroid_udf(path, metric=metric)
+        udf = quantize.make_nearest_centroid_udf(spec, metric=metric)
         assert vecs.select(udf("embedding").alias("c")).first().c == 1, metric
 
 
-def test_zero_norm_centroid_loses_like_the_oracle_null(spark):
+def test_zero_norm_centroid_loses_like_the_oracle_null(spark, tmp_path):
     """DuckDB DOUBLE division by zero yields NULL (never NaN), and NULL
     sorts LAST in both directions — so a zero-norm centroid's cosine
-    loses every oracle contest. The kernel's numpy 0/0 is NaN, which the
-    r9-era compare treated as WINNING the argmax: that would have handed
-    the whole corpus to a zero-norm centroid while the oracle assigned it
-    nothing (r10 review find, fixed by the explicit NULL class)."""
+    loses every oracle contest. The kernel's numpy 0/0 is NaN, which
+    np.argmax would pick: that would hand the whole corpus to a zero-norm
+    centroid while the oracle assigns it nothing (r10 review find) — the
+    kernel scores the NULL class −inf instead."""
     zero = [0.0] * 8
     good = [float(x + 1) for x in range(8)]
-    path = _write_cents(spark, [(0, zero), (5, good)], "q_cents_nan")
+    spec = _write_cents(tmp_path, [(0, zero), (5, good)])
     vecs = spark.createDataFrame([(0, good)], "vec_id long, embedding array<float>")
-    cos = quantize.make_nearest_centroid_udf(path, metric="cos")
+    cos = quantize.make_nearest_centroid_udf(spec, metric="cos")
     # ORDER BY ccos DESC, cent_id NULLS LAST: 1.0 (cent 5) beats NULL (cent 0)
     assert vecs.select(cos("embedding").alias("c")).first().c == 5
-    l2 = quantize.make_nearest_centroid_udf(path, metric="l2")
+    l2 = quantize.make_nearest_centroid_udf(spec, metric="l2")
     # ORDER BY d2 ASC: no division, no NULL class — exact match (cent 5) wins
     assert vecs.select(l2("embedding").alias("c")).first().c == 5
 
 
-def test_all_null_scores_fall_to_lowest_cent_id(spark):
+def test_all_null_scores_fall_to_lowest_cent_id(spark, tmp_path):
     """A zero-norm PROBE vector scores NULL against every centroid; the
     oracle's ORDER BY ccos DESC, cent_id then picks the lowest cent_id —
-    the kernel's first-candidate-accepted + strict-update scan must too."""
+    the kernel's argmax over an all −inf row must too."""
     zero = [0.0] * 8
     a = [float(x + 1) for x in range(8)]
     b = [float(8 - x) for x in range(8)]
-    path = _write_cents(spark, [(4, a), (2, b)], "q_cents_allnull")
+    spec = _write_cents(tmp_path, [(4, a), (2, b)])
     vecs = spark.createDataFrame([(0, zero)], "vec_id long, embedding array<float>")
-    cos = quantize.make_nearest_centroid_udf(path, metric="cos")
+    cos = quantize.make_nearest_centroid_udf(spec, metric="cos")
     assert vecs.select(cos("embedding").alias("c")).first().c == 2
-
-
-def test_nan_data_score_matches_engine_sort_order(spark):
-    """Genuine NaN DATA (a NaN component in a centroid) is the NaN class,
-    not the NULL class: both engines' division propagates it as NaN, which
-    sorts STRICTLY ABOVE +inf — it must WIN the cosine argmax and LOSE the
-    L2 argmin. Distinct from the zero-denominator case above."""
-    nan_cent = [float("nan")] + [1.0] * 7
-    good = [float(x + 1) for x in range(8)]
-    path = _write_cents(spark, [(0, nan_cent), (5, good)], "q_cents_nandata")
-    vecs = spark.createDataFrame([(0, good)], "vec_id long, embedding array<float>")
-    cos = quantize.make_nearest_centroid_udf(path, metric="cos")
-    # DESC: NaN (cent 0) sorts before 1.0 (cent 5)
-    assert vecs.select(cos("embedding").alias("c")).first().c == 0
-    l2 = quantize.make_nearest_centroid_udf(path, metric="l2")
-    # ASC: finite d2 (cent 5, exact match) beats NaN (cent 0)
-    assert vecs.select(l2("embedding").alias("c")).first().c == 5
-
-
-def test_nan_outranks_inf_in_pair_compare(spark):
-    """NaN sorts STRICTLY ABOVE +Infinity in both engines (pinned below
-    against Spark's own sort), so in an argmax contest NaN must beat +inf
-    and in an argmin +inf must beat NaN — a NaN→+inf remap would conflate
-    them and hand the contest to the scan-order (lowest-id) side. The
-    overflow (+inf with finite norms) is unreachable from array<float>
-    fixtures, so the kernel's compare is pinned at the numpy level."""
-    # the engine ground truth: ORDER BY x DESC puts NaN before Infinity
-    ordered = [
-        r.x
-        for r in spark.createDataFrame(
-            [(float("nan"),), (float("inf"),), (1.0,)], "x double"
-        )
-        .orderBy(F.col("x").desc())
-        .collect()
-    ]
-    assert np.isnan(ordered[0]) and ordered[1] == np.inf
-    inf = np.array([np.inf])
-    fin = np.array([1.0])
-    t, f = np.array([True]), np.array([False])
-    ph = np.array([0.0])  # placeholder score under a set nan flag
-    # argmax (cosine): NaN beats +inf beats finite
-    assert quantize.better(t, ph, f, inf, largest=True).all()
-    assert not quantize.better(f, inf, t, ph, largest=True).any()
-    assert quantize.better(f, inf, f, fin, largest=True).all()
-    # argmin (L2/d2): finite beats +inf beats NaN
-    assert quantize.better(f, inf, t, ph, largest=False).all()
-    assert not quantize.better(t, ph, f, inf, largest=False).any()
-    assert quantize.better(f, fin, f, inf, largest=False).all()
-    # ties (same class, equal score) keep the incumbent — lowest-id wins
-    assert not quantize.better(f, fin, f, fin, largest=True).any()
-    assert not quantize.better(t, ph, t, ph, largest=False).any()
-
-
-def test_pq_codes_match_bruteforce(spark):
-    n_sub, subdim = 4, 8
-    dim = n_sub * subdim
-    vec_rows = _rng_vecs(100, dim, 3)
-    cb_rows = []
-    rng = np.random.default_rng(5)
-    for m in range(n_sub):
-        for k in range(6):
-            cb_rows.append((int(k), int(m), [float(x) for x in rng.normal(size=subdim)]))
-    cb = spark.createDataFrame(cb_rows, "k long, m int, cv array<float>")
-    stage(cb, "q_pq_cb")
-    path = staged_table_path(spark, "q_pq_cb")
-    udf = quantize.make_pq_codes_udf(path, n_sub=n_sub, subdim=subdim)
-    vecs = spark.createDataFrame(vec_rows, "vec_id long, embedding array<float>")
-    got = {r.vec_id: list(r.codes) for r in vecs.select("vec_id", udf("embedding").alias("codes")).collect()}
-
-    def fold_dot(a, b):
-        acc = np.float64(0.0)
-        for j in range(len(a)):
-            acc += a[j] * b[j]
-        return acc
-
-    for vec_id, emb in vec_rows:
-        v = np.asarray(emb, dtype=np.float32).astype(np.float64)
-        expect = []
-        for m in range(n_sub):
-            sub = v[m * subdim : (m + 1) * subdim]
-            scored = []
-            for k, mm, cv in cb_rows:
-                if mm != m:
-                    continue
-                c = np.asarray(cv, dtype=np.float32).astype(np.float64)
-                scored.append((fold_dot(sub, sub) + fold_dot(c, c) - 2.0 * fold_dot(sub, c), k))
-            expect.append(min(scored)[1])
-        assert got[vec_id] == expect, vec_id
-
-
-def test_side_cache_refreshes_on_overwrite(spark):
-    v1 = [1.0] * 4
-    v2 = [-1.0] * 4
-    path = _write_cents(spark, [(0, v1)], "q_cache_probe")
-    df = quantize._load_side(path)
-    assert df["cent_id"].tolist() == [0]
-    # overwrite with different content under the same path — the
-    # fingerprint must invalidate the cache
-    stage(
-        spark.createDataFrame([(7, v2)], "cent_id long, ce array<float>"),
-        "q_cache_probe",
-    )
-    df2 = quantize._load_side(path)
-    assert df2["cent_id"].tolist() == [7]
 
 
 def test_cosine_udf_zero_norm_is_null_like_duckdb(spark):
@@ -407,8 +315,7 @@ def test_source_cents_spec_matches_staged_rows(spark):
 
     sf_dir = "/root/testdata/sf0.001"
     k = 8
-    spec = quantize.source_cents_spec(sf_dir, k, DIM)
-    side = quantize._load_cents(spec).sort_values("cent_id")
+    ids, cents = quantize._load_source_vecs(*quantize.source_cents_spec(sf_dir, k, DIM))
     ref = (
         _corpus(spark, sf_dir)
         .filter(F.col("vec_id") < k)
@@ -416,20 +323,14 @@ def test_source_cents_spec_matches_staged_rows(spark):
         .orderBy("cent_id")
         .collect()
     )
-    assert side["cent_id"].tolist() == [r.cent_id for r in ref]
-    for got, want in zip(side["ce"], ref):
-        assert np.asarray(got, dtype=np.float64).tolist() == list(want.ce)
+    assert ids.tolist() == [r.cent_id for r in ref]
+    for got, want in zip(cents, ref):
+        assert got.tolist() == list(want.ce)
 
 
-def test_source_cents_spec_applies_the_envelope():
+def test_source_cents_spec_applies_the_envelope(tmp_path):
     """Synthetic parquet with off-envelope rows in the first-K prefix: the
     loader must drop them exactly like the Spark-side _corpus filter."""
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     dim = 4
     rows = {
         "vec_id": [0, 1, 2, 3, 4, 5],
@@ -448,20 +349,21 @@ def test_source_cents_spec_applies_the_envelope():
             "embedding": pa.array(rows["embedding"], pa.list_(pa.float32())),
         }
     )
-    with tempfile.TemporaryDirectory() as d:
-        pq.write_table(t, os.path.join(d, "embeddings.parquet"))
-        side = quantize._load_cents(quantize.source_cents_spec(d, 6, dim))
-    assert side["cent_id"].tolist() == [0, 5]
+    pq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    ids, cents = quantize._load_source_vecs(*quantize.source_cents_spec(str(tmp_path), 6, dim))
+    assert ids.tolist() == [0, 5]
+    assert cents.tolist() == [[1.0, 2.0, 3.0, 4.0], [5.0, 6.0, 7.0, 8.0]]
 
 
 def test_source_pq_cb_spec_matches_staged_slices(spark):
-    """The source-derived PQ codebook must carry the same (m, k, cv)
-    subvector slices the staged table held."""
+    """The PQ codebook side is the first-PQ_K source spec sliced per
+    subspace: columns ``m*PQ_SUBDIM ..`` of its matrix must carry the same
+    (m, k, cv) subvector slices the staged codebook table held (the
+    oracle's ``cb`` CTE)."""
     from meos_rs_spark.queries.similarity import DIM, PQ_K, PQ_M, PQ_SUBDIM, _corpus
 
     sf_dir = "/root/testdata/sf0.001"
-    spec = quantize.source_pq_cb_spec(sf_dir, PQ_K, DIM, PQ_M, PQ_SUBDIM)
-    side = quantize._load_pq_cb(spec).sort_values(["m", "k"]).reset_index(drop=True)
+    ids, mat = quantize._load_source_vecs(*quantize.source_cents_spec(sf_dir, PQ_K, DIM))
     ms = F.explode(F.array(*[F.lit(m) for m in range(PQ_M)])).alias("m")
     ref = (
         _corpus(spark, sf_dir)
@@ -471,65 +373,131 @@ def test_source_pq_cb_spec_matches_staged_slices(spark):
         .orderBy("m", "k")
         .collect()
     )
-    assert len(side) == len(ref)
-    for (_, got), want in zip(side.iterrows(), ref):
-        assert (int(got["m"]), int(got["k"])) == (want.m, want.k)
-        assert np.asarray(got["cv"], dtype=np.float64).tolist() == list(want.cv)
+    got = [
+        (m, int(k), mat[i, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM].tolist())
+        for m in range(PQ_M)
+        for i, k in enumerate(ids)
+    ]
+    assert got == [(r.m, r.k, list(r.cv)) for r in ref]
 
 
 def test_pq_adc_matches_codes_plus_lut_reference(spark):
     """The fused ADC kernel must emit exactly the doubles the joined shape
-    produced: codes from make_pq_codes_udf, each probe's approx_d2 the
-    fixed-m-order sum of seq_sqdist(probe subvector, coded centroid)."""
+    produced: per subspace the brute-force argmin code (ORDER BY d2, k over
+    scalar sequential folds), each probe's approx_d2 the fixed-m-order sum
+    of the expanded-form d2 between the probe subvector and the coded
+    centroid."""
     from meos_rs_spark.queries.similarity import DIM, N_PROBES, PQ_K, PQ_M, PQ_SUBDIM, _corpus
 
     sf_dir = "/root/testdata/sf0.001"
-    cb_spec = quantize.source_pq_cb_spec(sf_dir, PQ_K, DIM, PQ_M, PQ_SUBDIM)
+    cb_spec = quantize.source_cents_spec(sf_dir, PQ_K, DIM)
     pr_spec = quantize.source_cents_spec(sf_dir, N_PROBES, DIM)
     emb = _corpus(spark, sf_dir)
     adc = quantize.make_pq_adc_udf(cb_spec, pr_spec, n_sub=PQ_M, subdim=PQ_SUBDIM)
-    got = {
-        r.vec_id: (list(r.s.pids), list(r.s.d2s))
-        for r in emb.select("vec_id", adc("embedding").alias("s")).collect()
-    }
-
-    codes_udf = quantize.make_pq_codes_udf(cb_spec, n_sub=PQ_M, subdim=PQ_SUBDIM)
-    codes = {
-        r.vec_id: list(r.codes)
-        for r in emb.select("vec_id", codes_udf("embedding").alias("codes")).collect()
-    }
-    side = quantize._load_pq_cb(cb_spec)
-    probes = quantize._load_cents(pr_spec)
-    from meos_rs_spark.functions.embeddings import _seq_dot
+    rows = emb.select("vec_id", "embedding", adc("embedding").alias("s")).collect()
+    ks, cb = quantize._load_source_vecs(*cb_spec)
+    pids, pvecs = quantize._load_source_vecs(*pr_spec)
 
     def fold_dot(a, b):
-        return _seq_dot(a[None, :], b[None, :])[0]
+        acc = np.float64(0.0)
+        for j in range(len(a)):
+            acc += a[j] * b[j]
+        return acc
 
-    for vec_id, (pids, d2s) in got.items():
-        assert pids == probes["cent_id"].tolist()
-        for p_i, pid in enumerate(pids):
-            pe = np.asarray(probes["ce"][probes["cent_id"] == pid].iloc[0], dtype=np.float32).astype(np.float64)
+    def d2(a, b):
+        return fold_dot(a, a) + fold_dot(b, b) - 2.0 * fold_dot(a, b)
+
+    def sub(v, m):
+        return v[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
+
+    for r in rows:
+        v = np.asarray(r.embedding, dtype=np.float32).astype(np.float64)
+        codes = [
+            min((d2(sub(v, m), sub(cb[i], m)), k, i) for i, k in enumerate(ks))[2]
+            for m in range(PQ_M)
+        ]
+        assert list(r.s.pids) == pids.tolist()
+        want = []
+        for p in pvecs:
             total = 0.0
             for m in range(PQ_M):
-                k = codes[vec_id][m]
-                cv = side[(side["m"] == m) & (side["k"] == k)]["cv"].iloc[0]
-                c = np.asarray(cv, dtype=np.float32).astype(np.float64)
-                sub = pe[m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-                total += fold_dot(sub, sub) + fold_dot(c, c) - 2.0 * fold_dot(sub, c)
-            assert d2s[p_i] == total, (vec_id, pid)
+                total += d2(sub(p, m), sub(cb[codes[m]], m))
+            want.append(total)
+        assert list(r.s.d2s) == want, r.vec_id
 
 
-def test_source_vecs_cache_keeps_sibling_k_entries():
+def test_pq_codes_match_bruteforce(spark, tmp_path):
+    """Synthetic corpus against a codebook drawn independently of it (the
+    fixture test's codebook is the corpus head, so those rows code to
+    themselves): each subspace's code inside the ADC kernel must be the
+    brute-force ORDER BY d2, k argmin over scalar sequential folds, as
+    read back through the distances it sums."""
+    n_sub, subdim = 4, 8
+    dim = n_sub * subdim
+    vec_rows = _rng_vecs(100, dim, 3)
+    rng = np.random.default_rng(5)
+    (tmp_path / "cb").mkdir()
+    (tmp_path / "pr").mkdir()
+    cb_spec = _write_cents(tmp_path / "cb", [(k, [float(x) for x in rng.normal(size=dim)]) for k in range(6)])
+    pr_spec = _write_cents(tmp_path / "pr", _rng_vecs(3, dim, 7))
+    adc = quantize.make_pq_adc_udf(cb_spec, pr_spec, n_sub=n_sub, subdim=subdim)
+    vecs = spark.createDataFrame(vec_rows, "vec_id long, embedding array<float>")
+    got = {r.vec_id: list(r.s.d2s) for r in vecs.select("vec_id", adc("embedding").alias("s")).collect()}
+    ks, cb = quantize._load_source_vecs(*cb_spec)
+    _, pvecs = quantize._load_source_vecs(*pr_spec)
+
+    def fold_dot(a, b):
+        acc = np.float64(0.0)
+        for j in range(len(a)):
+            acc += a[j] * b[j]
+        return acc
+
+    def d2(a, b):
+        return fold_dot(a, a) + fold_dot(b, b) - 2.0 * fold_dot(a, b)
+
+    def sub(v, m):
+        return v[m * subdim : (m + 1) * subdim]
+
+    for vec_id, emb in vec_rows:
+        v = np.asarray(emb, dtype=np.float32).astype(np.float64)
+        codes = [min((d2(sub(v, m), sub(cb[i], m)), k, i) for i, k in enumerate(ks))[2] for m in range(n_sub)]
+        want = []
+        for p in pvecs:
+            total = 0.0
+            for m in range(n_sub):
+                total += d2(sub(p, m), sub(cb[codes[m]], m))
+            want.append(total)
+        assert got[vec_id] == want, vec_id
+
+
+def test_side_cache_refreshes_on_overwrite(tmp_path):
+    """Overwriting the source parquet under the same path and spec must
+    invalidate the cached side: the next load serves the new rows."""
+    dim = 4
+    spec = _write_cents(tmp_path, [(0, [1.0] * dim), (7, [2.0] * dim)])
+    ids, _ = quantize._load_source_vecs(*spec)
+    assert ids.tolist() == [0, 7]
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([3], pa.int64()),
+                "embedding": pa.array([[-1.0] * dim], pa.list_(pa.float32())),
+            }
+        ),
+        spec[0],
+    )
+    # a distinct mtime, so a rewrite inside the clock tick is still seen
+    os.utime(spec[0], (1, 1))
+    ids, cents = quantize._load_source_vecs(*spec)
+    assert ids.tolist() == [3] and cents.tolist() == [[-1.0] * dim]
+
+
+def test_source_vecs_cache_keeps_sibling_k_entries(tmp_path):
     """Two specs over ONE source parquet with different k (the IVF kernel
     loads cents k=8 AND probes k=5 per batch) must coexist in the worker
     cache — the r16 self-review found the eviction matched on path alone,
-    so every batch evicted its sibling and re-read the dataset."""
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+    so every batch evicted its sibling and re-read the dataset. A content
+    change under the same path must still serve the new rows."""
     dim = 4
     t = pa.table(
         {
@@ -537,38 +505,35 @@ def test_source_vecs_cache_keeps_sibling_k_entries():
             "embedding": pa.array([[float(i)] * dim for i in range(10)], pa.list_(pa.float32())),
         }
     )
-    with tempfile.TemporaryDirectory() as d:
-        src = os.path.join(d, "embeddings.parquet")
-        pq.write_table(t, src)
-        a = quantize._load_source_vecs(src, 8, dim)
-        b = quantize._load_source_vecs(src, 5, dim)
-        keys = [s for s in quantize._SIDE_CACHE if s[0] == "src_vecs" and s[1] == src]
-        assert len(keys) == 2, keys
-        # cache HIT: the returned frame is the same object, no re-read
-        assert quantize._load_source_vecs(src, 8, dim) is a
-        assert quantize._load_source_vecs(src, 5, dim) is b
-        # a content change still evicts the matching spec's stale entry
-        pq.write_table(t.slice(0, 9), src)
-        os.utime(src, (1, 1))
-        a2 = quantize._load_source_vecs(src, 8, dim)
-        assert a2 is not a and len(a2) == 8
-        keys8 = [
-            s
-            for s in quantize._SIDE_CACHE
-            if s[0] == "src_vecs" and s[1] == src and s[3:] == (8, dim)
-        ]
-        assert len(keys8) == 1
+    src = str(tmp_path / "embeddings.parquet")
+    pq.write_table(t, src)
+    a = quantize._load_source_vecs(src, 8, dim)
+    b = quantize._load_source_vecs(src, 5, dim)
+    keys = [s for s in quantize._SIDE_CACHE if s[0] == src]
+    assert len(keys) == 2, keys
+    # cache HIT: the returned side is the same object, no re-read
+    assert quantize._load_source_vecs(src, 8, dim) is a
+    assert quantize._load_source_vecs(src, 5, dim) is b
+    # overwrite with different content under the same path: the
+    # fingerprint must invalidate the matching spec's entry
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([7], pa.int64()),
+                "embedding": pa.array([[-1.0] * dim], pa.list_(pa.float32())),
+            }
+        ),
+        src,
+    )
+    os.utime(src, (1, 1))
+    ids, cents = quantize._load_source_vecs(src, 8, dim)
+    assert ids.tolist() == [7] and cents.tolist() == [[-1.0] * dim]
+    assert len([s for s in quantize._SIDE_CACHE if s[0] == src and s[2:] == (8, dim)]) == 1
 
 
-def test_source_vecs_envelope_drops_null_component():
+def test_source_vecs_envelope_drops_null_component(tmp_path):
     """A NULL list ELEMENT arrives as NaN through Arrow and must fail the
     finite test exactly like the Spark exists() predicate."""
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     dim = 4
     t = pa.table(
         {
@@ -576,44 +541,34 @@ def test_source_vecs_envelope_drops_null_component():
             "embedding": pa.array([[1.0, None, 3.0, 4.0], [1.0, 2.0, 3.0, 4.0]], pa.list_(pa.float32())),
         }
     )
-    with tempfile.TemporaryDirectory() as d:
-        pq.write_table(t, os.path.join(d, "embeddings.parquet"))
-        side = quantize._load_cents(quantize.source_cents_spec(d, 2, dim))
-    assert side["cent_id"].tolist() == [1]
+    pq.write_table(t, str(tmp_path / "embeddings.parquet"))
+    ids, _ = quantize._load_source_vecs(*quantize.source_cents_spec(str(tmp_path), 2, dim))
+    assert ids.tolist() == [1]
 
 
-def test_probe_cosines_nan_envelope(spark):
-    """Pins the make_probe_cosines_udf NaN envelope (r16 ADVICE, medium):
-    a NaN cosine — inf/inf after intermediate overflow of FINITE
-    components, the only NaN reachable inside the corpus envelope —
-    arrives as NULL through Arrow's list NaN→null coercion, whereas the
-    old try_divide shape emitted NaN (which sorts FIRST under ORDER BY
-    cosine DESC while NULL sorts LAST). The kernel docstring documents
-    this as a known envelope; this test is the alarm if either side of
-    that statement drifts (a Spark/Arrow release that starts passing NaN
-    through would silently FIX the divergence and obsolete the note)."""
-    big = [1.0e200] * 4
-    path = _write_cents(spark, [(0, big)], "q_probe_nan_env")
-    udf = quantize.make_probe_cosines_udf(path)
-    vecs = spark.createDataFrame([(9, big)], "vec_id long, embedding array<float>")
-    (row,) = vecs.select(udf("embedding").alias("s")).collect()
-    # float32 1e200 -> inf componentwise, so num = inf, den = inf: NaN
-    assert row.s.pids == [0]
-    assert row.s.cosines == [None]  # the envelope: NaN emitted as NULL
-    # the try_divide shape this kernel replaced emits NaN on the same input
-    ref = vecs.select(
-        F.try_divide(
-            seq_dot(F.array([F.lit(v) for v in big]).cast("array<float>"), "embedding"),
-            F.sqrt(seq_dot("embedding", "embedding"))
-            * F.sqrt(
-                seq_dot(
-                    F.array([F.lit(v) for v in big]).cast("array<float>"),
-                    F.array([F.lit(v) for v in big]).cast("array<float>"),
-                )
-            ),
-        ).alias("c")
-    ).collect()[0].c
-    assert ref != ref  # NaN: the two shapes genuinely diverge here
+_KERNELS = {
+    "nearest_l2": lambda s: quantize.make_nearest_centroid_udf(s, metric="l2"),
+    "nearest_cos": lambda s: quantize.make_nearest_centroid_udf(s, metric="cos"),
+    "ivf": lambda s: quantize.make_ivf_scores_udf(s, s, nprobe=1),
+    "probe_cosines": quantize.make_probe_cosines_udf,
+    "pq_adc": lambda s: quantize.make_pq_adc_udf(s, s, n_sub=2, subdim=4),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_KERNELS))
+def test_kernels_raise_on_a_non_finite_component(kernel, tmp_path):
+    """The kernels rank only inside the corpus envelope, where no score is
+    NaN or ±inf. Off it (an ±inf component, a NaN, or a NULL component
+    arriving as NaN) ranking would silently diverge from the oracle, so
+    every kernel refuses the batch."""
+    good = [float(x + 1) for x in range(8)]
+    spec = _write_cents(tmp_path, [(0, good), (1, good[::-1])])
+    udf = _KERNELS[kernel](spec)
+    assert len(udf.func(pd.Series([np.asarray(good, np.float32)]))) == 1
+    for bad in (float("inf"), float("-inf"), float("nan"), None):
+        vec = np.asarray([bad] + good[1:], dtype=np.float32)
+        with pytest.raises(ValueError, match="finite"):
+            udf.func(pd.Series([np.asarray(good, np.float32), vec]))
 
 
 def test_load_source_vecs_shuffled_source_exact_and_short_circuits(tmp_path):
@@ -621,9 +576,6 @@ def test_load_source_vecs_shuffled_source_exact_and_short_circuits(tmp_path):
     SHUFFLED (row-group stats cannot prune to the head) still derives the
     exact first-K-valid rows, and the batch scan short-circuits once all
     k distinct head ids have been seen instead of reading the whole file."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     rng = np.random.default_rng(3)
     dim, k, n = 8, 5, 2000
     ids = rng.permutation(n)
@@ -632,11 +584,11 @@ def test_load_source_vecs_shuffled_source_exact_and_short_circuits(tmp_path):
     path = str(tmp_path / "shuffled.parquet")
     pq.write_table(t, path, row_group_size=100)
 
-    got = quantize._load_source_vecs(path, k, dim)
-    assert got["vec_id"].tolist() == list(range(k))
+    got_ids, got = quantize._load_source_vecs(path, k, dim)
+    assert got_ids.tolist() == list(range(k))
     want = {int(i): e for i, e in zip(ids, embs) if i < k}
-    for vid, emb in zip(got["vec_id"], got["embedding"]):
-        assert np.allclose(np.asarray(emb, dtype=np.float64), want[int(vid)], atol=1e-6)
+    for vid, emb in zip(got_ids, got):
+        assert np.allclose(emb, want[int(vid)], atol=1e-6)
 
     # short-circuit: the batch loop must stop at the batch where the k-th
     # distinct id appears — a poisoned iterator past that point must never

@@ -84,34 +84,33 @@ def test_estimate_single_stage_per_build(spark):
 
 def test_fan_out_force_skips_the_rdd_probe(spark):
     """force=True must never touch df.rdd: the scan-split probe answers the
-    wrong question for group-exchange callers, and .rdd raises under Spark
-    Connect — where the forced path used to silently no-op, returning the
-    AQE-serial-Python hazard it exists to fix (r8 ADVICE item 1)."""
+    wrong question for group-exchange callers (r8 ADVICE item 1)."""
     df = spark.range(100).withColumn("k", F.col("id") % 7)
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(
             type(df),
             "rdd",
-            property(lambda self: (_ for _ in ()).throw(RuntimeError("Connect: no rdd"))),
+            property(lambda self: (_ for _ in ()).throw(RuntimeError("no rdd"))),
         )
         out = staging.fan_out(df, "k", force=True)
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
-def test_fan_out_force_falls_back_to_shuffle_partitions_under_connect(spark):
-    """With no sparkContext at all (Spark Connect), force=True must still
-    land an explicit-count (AQE-coalesce-exempt) keyed exchange, sized by
-    the session's shuffle-partition conf (r8 ADVICE item 1)."""
+@pytest.mark.parametrize("force", [True, False], ids=["forced", "unforced"])
+def test_fan_out_raises_without_a_spark_context(spark, force):
+    """fan_out sizes its exchange from the session's SparkContext; a
+    session without one (Spark Connect, which the package does not
+    support) must fail loudly instead of picking another partition count
+    or skipping the repartition."""
     df = spark.range(100).withColumn("k", F.col("id") % 7)
-    expected = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(
             type(spark),
             "sparkContext",
-            property(lambda self: (_ for _ in ()).throw(RuntimeError("Connect"))),
+            property(lambda self: (_ for _ in ()).throw(RuntimeError("no SparkContext"))),
         )
-        out = staging.fan_out(df, "k", force=True)
-    assert out.rdd.getNumPartitions() == expected
+        with pytest.raises(RuntimeError, match="no SparkContext"):
+            staging.fan_out(df, "k", force=force)
 
 
 def test_is_local_root():
