@@ -31,6 +31,8 @@ Contract (the oracles are unchanged):
   and DuckDB's ``list_dot_product``;
 * squared L2 stays in expanded dot form ``vn2 + cn2 - 2*dot`` combined
   left-to-right, exactly like ``embeddings.seq_sqdist``;
+* a side holds at least one vector and each vec_id once; loading one
+  that does not raises ``ValueError`` naming its path and k;
 * sides are sorted by id and ``np.argmin``/``np.argmax`` keep the first
   extreme, so the lowest id wins ties — the oracles' ``ORDER BY score
   [DESC], cent_id``;
@@ -128,7 +130,13 @@ def _load_source_vecs(src_path: str, k: int, dim: int) -> tuple[np.ndarray, np.n
     vec_id is written in order (the fixtures are). On an UNSORTED source
     the stats cannot prune, so the batch loop additionally short-circuits
     via ``_first_k_batches`` — the scan stops at the batch where the
-    k-th distinct head id appears instead of reading the whole file."""
+    k-th distinct head id appears instead of reading the whole file.
+
+    Raises ValueError naming the path and k when a vec_id repeats among the
+    rows read, or when none of them is in the envelope (an empty quantizer).
+    The duplicate check covers the rows read only: on the fixtures' sorted
+    layout that is the stats-pruned head, and on an unsorted source the
+    scan may stop before a later duplicate."""
     key = (src_path, _fingerprint(src_path), k, dim)
     side = _SIDE_CACHE.get(key)
     if side is None:
@@ -143,14 +151,19 @@ def _load_source_vecs(src_path: str, k: int, dim: int) -> tuple[np.ndarray, np.n
             schema=scanner.projected_schema,
         )
         df = t.to_pandas().sort_values("vec_id")
+        ids = df["vec_id"].to_numpy(np.int64)
+        if (np.diff(ids) == 0).any():
+            raise ValueError(f"{src_path}: vec_id repeats among the rows with vec_id < {k}")
         vecs = [None if e is None else np.asarray(e, np.float64) for e in df["embedding"]]
         keep = np.array(
             [v is not None and len(v) == dim and np.isfinite(v).all() for v in vecs], dtype=bool
         )
-        side = (
-            df["vec_id"].to_numpy(np.int64)[keep],
-            np.array([v for v, ok in zip(vecs, keep) if ok]).reshape(-1, dim),
-        )
+        if not keep.any():
+            raise ValueError(
+                f"{src_path}: no row with vec_id < {k} is a valid {dim}-dim vector "
+                "(empty quantizer)"
+            )
+        side = (ids[keep], np.array([v for v, ok in zip(vecs, keep) if ok]))
         # evict only the SAME spec's stale fingerprints: two specs over one
         # source parquet with different k (ivf cents k=8 + probes k=5, pq
         # codebook k=16 + probes k=5) must coexist, or every batch evicts
@@ -256,18 +269,15 @@ def make_ivf_scores_udf(cents_side, probes_side, *, nprobe: int):
     * the emitted pair score is the ``cosine()`` contract — NULL for a
       zero-norm side, the plain double otherwise.
 
-    Empty centroid or probe sets emit empty arrays (the joins' empty
-    result). The ``vec_id != probe_id`` guard stays JVM-side.
+    The ``vec_id != probe_id`` guard stays JVM-side.
     """
 
     @pandas_udf(_pairs_type("cosines"))
     def ivf_scores(emb: pd.Series) -> pd.DataFrame:
-        cids, cents = _load_source_vecs(*cents_side)
+        _, cents = _load_source_vecs(*cents_side)
         pids, pvecs = _load_source_vecs(*probes_side)
-        n = len(emb)
-        if n == 0 or len(cids) == 0 or len(pids) == 0:
-            empty: list = [[]] * n
-            return pd.DataFrame({"pids": empty, "cosines": empty})
+        if len(emb) == 0:
+            return pd.DataFrame({"pids": [], "cosines": []})
         vecs = _batch(emb)
         vn2 = _seq_dot(vecs, vecs)
         cell = np.argmax(_cos(vecs, vn2, cents, null=-np.inf), axis=1)
@@ -309,9 +319,8 @@ def make_probe_cosines_udf(probes_side):
     def probe_cosines(emb: pd.Series) -> pd.DataFrame:
         pids, pvecs = _load_source_vecs(*probes_side)
         n = len(emb)
-        if n == 0 or len(pids) == 0:
-            empty: list = [[]] * n
-            return pd.DataFrame({"pids": empty, "cosines": empty})
+        if n == 0:
+            return pd.DataFrame({"pids": [], "cosines": []})
         vecs = _batch(emb)
         cos = _cos(vecs, _seq_dot(vecs, vecs), pvecs, null=np.nan)
         return pd.DataFrame({"pids": [pids.tolist()] * n, "cosines": _cells(cos).tolist()})
@@ -336,9 +345,6 @@ def make_pq_adc_udf(cb_side, probes_side, *, n_sub: int, subdim: int):
     joined shape summed them, every term the expanded-form
     ``pn2 + cn2 - 2*dot`` sequential fold — so the emitted doubles are
     bit-identical to the 4-broadcast-join plan this replaces.
-
-    An empty codebook or probe set yields empty output arrays for every
-    row — the joined shape's empty result.
     """
 
     @pandas_udf(_pairs_type("d2s"))
@@ -346,9 +352,8 @@ def make_pq_adc_udf(cb_side, probes_side, *, n_sub: int, subdim: int):
         _, cb = _load_source_vecs(*cb_side)
         pids, pvecs = _load_source_vecs(*probes_side)
         n = len(emb)
-        if n == 0 or len(pids) == 0 or len(cb) == 0:
-            empty: list = [[]] * n
-            return pd.DataFrame({"pids": empty, "d2s": empty})
+        if n == 0:
+            return pd.DataFrame({"pids": [], "d2s": []})
         vecs = _batch(emb)
         total = np.zeros((n, len(pids)), dtype=np.float64)
         for m in range(n_sub):

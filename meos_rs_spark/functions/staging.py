@@ -143,15 +143,32 @@ def side_table_name(base: str, sf_dir: str) -> str:
     return f"{base}_{key}"
 
 
-def adopt_app_dir(app_dir: str, root: str) -> None:
-    """Give a non-staging per-application scratch dir (e.g. the sqlite store
-    behind ``snk_jdbc_upsert``) the same lifecycle as staged tables: created
-    now, liveness-marked, removed at interpreter exit, and stale siblings
-    from dead sessions pruned opportunistically (ADVICE r4: such dirs
-    otherwise accumulate one per bench/test session forever)."""
+def _adopt_app_dir(app_dir: str, root: str) -> None:
+    """Create a per-application dir under ``root`` with the staging
+    lifecycle: liveness-marked, removed at interpreter exit, and stale
+    siblings from dead sessions pruned opportunistically (such dirs would
+    otherwise accumulate one per bench/test session forever). The dir must
+    exist before the liveness touch, or a swallowed marker-write failure
+    would leave the session on the dir-mtime prune path."""
     os.makedirs(app_dir, exist_ok=True)
     _register_cleanup(app_dir, root)
     _touch_live(app_dir)
+
+
+def scratch_path(spark, sf_dir: str, name: str) -> str:
+    """Per-application scratch path for ``name`` built from fixture
+    ``sf_dir``: ``<tmp>/meos_rs_spark_scratch/<applicationId>/<fixture
+    tag>/name``, with the staging lifecycle (``_adopt_app_dir``).
+
+    Namespaced by applicationId like staged tables: a path keyed only by the
+    fixture tag is SHARED across concurrent sessions (bench + a background
+    pytest), so one session's overwrite or reset lands mid-read of
+    another's resolved file listing. Sink round-trips, the sqlite store and
+    the streams' stores and checkpoints all live here."""
+    root = os.path.join(tempfile.gettempdir(), "meos_rs_spark_scratch")
+    app_dir = os.path.join(root, spark.sparkContext.applicationId)
+    _adopt_app_dir(app_dir, root)
+    return os.path.join(app_dir, os.path.basename(sf_dir.rstrip("/")), name)
 
 
 def staged_table_path(spark, name: str) -> str:
@@ -186,13 +203,7 @@ def stage(df: DataFrame, name: str) -> DataFrame:
     app_dir = os.path.dirname(path)
     root = os.path.dirname(app_dir)
     if _is_local_root(root):
-        # the dir must exist BEFORE the liveness touch: on the session's
-        # first stage() call the parquet write hasn't created it yet, and a
-        # swallowed marker-write failure would leave the session on the
-        # dir-mtime prune path
-        os.makedirs(app_dir, exist_ok=True)
-        _register_cleanup(app_dir, root)
-        _touch_live(app_dir)
+        _adopt_app_dir(app_dir, root)
     # zstd over the default snappy: measured on the heaviest staged table
     # (the minhash signature with its shingle-set arrays) it writes as fast
     # or faster AND ~30% smaller — at 100 TB the staged intermediate's

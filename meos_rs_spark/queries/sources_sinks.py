@@ -22,12 +22,12 @@ reference runs it server-side).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
+from meos_rs_spark.functions.staging import scratch_path
 from meos_rs_spark.functions.trajectory import (
     DEDUP_QUALIFY,
     DEDUP_XY_CTE,
@@ -42,26 +42,6 @@ from meos_rs_spark.functions.trajectory import (
 )
 from meos_rs_spark.registry import register
 from meos_rs_spark.sources.tables import TABLE_NAMES, load_table
-
-
-def _scratch(spark, sf_dir: str, name: str) -> str:
-    """Per-application scratch path with the staging lifecycle.
-
-    Namespaced by applicationId — the invariant functions/staging.py and
-    the sqlite store already enforce: a path keyed only by the fixture tag
-    is SHARED across concurrent sessions (bench + a background pytest, the
-    combination the project notes warn about), so one session's
-    mode("overwrite") delete+rewrite lands mid-read of another's resolved
-    file listing (review find, r7). adopt_app_dir makes the per-app dir
-    liveness-marked, removed at exit, and prunes stale siblings.
-    """
-    from meos_rs_spark.functions.staging import adopt_app_dir
-
-    root = os.path.join(tempfile.gettempdir(), "meos_rs_spark_scratch")
-    app_dir = os.path.join(root, spark.sparkContext.applicationId)
-    adopt_app_dir(app_dir, root)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(app_dir, tag, name)
 
 
 # --- S1/S2: CSV scan (explicit schema, header, multi-file glob) ------------
@@ -90,7 +70,7 @@ FROM events GROUP BY event_type
     "aggregate must equal the parquet source",
 )
 def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(spark, sf_dir, "events_csv")
+    path = scratch_path(spark, sf_dir, "events_csv")
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     ev.repartition(4).write.mode("overwrite").option("header", True).csv(path)
     back = spark.read.schema(_CSV_SCHEMA).option("header", True).csv(path)
@@ -116,7 +96,7 @@ FROM dedup GROUP BY mmsi HAVING count(*) >= 2
     "write text JSON, re-read with from_json, summary must survive the round-trip",
 )
 def snk_jsonl_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(spark, sf_dir, "trips_jsonl")
+    path = scratch_path(spark, sf_dir, "trips_jsonl")
     trips = assemble(posits_xy(spark, sf_dir), min_size=2)
     lines = trips.select(
         F.to_json(
@@ -163,7 +143,7 @@ FROM merged GROUP BY mmsi
     "A6 merge, read the store back — equals whole-set assembly",
 )
 def snk_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(spark, sf_dir, "trips_store")
+    path = scratch_path(spark, sf_dir, "trips_store")
     pts = posits_xy(spark, sf_dir)
     # split point stays engine-side as an uncorrelated scalar subquery (the
     # cb12afe idiom): no driver .collect() round-trip AND no join operator —
@@ -198,7 +178,7 @@ def snk_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("old_traj"), empty), F.coalesce(F.col("new_traj"), empty)
         ).alias("traj"),
     )
-    upserted = _scratch(spark, sf_dir, "trips_store_v2")
+    upserted = scratch_path(spark, sf_dir, "trips_store_v2")
     merged.write.mode("overwrite").parquet(upserted)
     back = spark.read.parquet(upserted)
     t = F.col("traj")
@@ -255,7 +235,7 @@ FROM orders GROUP BY o_orderstatus
 def snk_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meos_rs_spark.functions.determinism import money_sum
 
-    path = _scratch(spark, sf_dir, "orders_by_status")
+    path = scratch_path(spark, sf_dir, "orders_by_status")
     o = load_table(spark, sf_dir, "orders")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path)
@@ -284,20 +264,13 @@ def snk_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meos_rs_spark.functions.determinism import money_sum
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    # deliberately NOT restored: the returned DataFrame is planned at the
-    # caller's action, so bucketing must still be enabled then for the
-    # exchange-free plan this query exists to demonstrate. "true" is the
-    # Spark DEFAULT — this is canonicalization against a leftover
-    # experiment, not a conf leak (probe legs reset their own confs via
-    # probekit.CONTEST_CONFS).
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     for name, df, key in (
         (f"meos_bkt_orders_{tag}", load_table(spark, sf_dir, "orders"), "o_custkey"),
         (f"meos_bkt_customer_{tag}", load_table(spark, sf_dir, "customer"), "c_custkey"),
     ):
         (
             df.write.mode("overwrite")
-            .option("path", _scratch(spark, sf_dir, name))
+            .option("path", scratch_path(spark, sf_dir, name))
             .bucketBy(8, key)
             .sortBy(key)
             .saveAsTable(name)
@@ -333,7 +306,7 @@ GROUP BY o_orderpriority
 def src_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meos_rs_spark.functions.determinism import money_sum
 
-    path = _scratch(spark, sf_dir, "orders_by_status_pruned")
+    path = scratch_path(spark, sf_dir, "orders_by_status_pruned")
     o = load_table(spark, sf_dir, "orders")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
@@ -367,7 +340,7 @@ FROM unioned
 def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meos_rs_spark.functions.determinism import money_sum
 
-    path = _scratch(spark, sf_dir, "orders_evolving")
+    path = scratch_path(spark, sf_dir, "orders_evolving")
     o = load_table(spark, sf_dir, "orders")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
@@ -406,7 +379,7 @@ FROM events GROUP BY event_type
 def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meos_rs_spark.functions.determinism import money_sum
 
-    path = _scratch(spark, sf_dir, "events_orc")
+    path = scratch_path(spark, sf_dir, "events_orc")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
     ev.repartition(4).write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
@@ -455,7 +428,7 @@ FROM events
 def src_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meos_rs_spark.functions.determinism import money_sum
 
-    path = _scratch(spark, sf_dir, "events_dirty_csv")
+    path = scratch_path(spark, sf_dir, "events_dirty_csv")
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     # concat over coalesce-to-empty, NOT concat_ws: concat_ws SKIPS NULL
     # arguments, so a NULL field silently collapses the CSV arity and the
@@ -521,7 +494,7 @@ def src_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from meos_rs_spark.functions.trajectory import point_wkt, posits
     from meos_rs_spark.sources.wkt_source import register_wkt_source
 
-    path = _scratch(spark, sf_dir, "posits_wkt")
+    path = scratch_path(spark, sf_dir, "posits_wkt")
     # a NULL-position posit has no WKT point representation: the concat
     # renders it as a NULL line (which the text sink rejects or the reader
     # grammar drops, depending on version — either way silently). The
@@ -583,7 +556,7 @@ FROM documents WHERE doc_id < 200 AND text IS NOT NULL
     "exactly what opaque media blobs need.",
 )
 def src_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _scratch(spark, sf_dir, "docs_bin")
+    path = scratch_path(spark, sf_dir, "docs_bin")
     d = load_table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") < 200) & F.col("text").isNotNull()
     )
@@ -648,8 +621,8 @@ FROM events GROUP BY event_type
 def snk_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    frag = _scratch(spark, sf_dir, "events_fragmented")
-    compact = _scratch(spark, sf_dir, "events_compacted")
+    frag = scratch_path(spark, sf_dir, "events_fragmented")
+    compact = scratch_path(spark, sf_dir, "events_compacted")
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id", "event_type")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
     small = spark.read.parquet(frag)
@@ -715,8 +688,8 @@ WHERE l.op IS NULL OR l.op != 'D'
 def snk_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    base_path = _scratch(spark, sf_dir, "cdc_base")
-    out_path = _scratch(spark, sf_dir, "cdc_applied")
+    base_path = scratch_path(spark, sf_dir, "cdc_base")
+    out_path = scratch_path(spark, sf_dir, "cdc_applied")
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )
@@ -886,11 +859,11 @@ def snk_jdbc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import sqlite3
 
-    # _scratch is applicationId-namespaced with the staging lifecycle
+    # scratch_path is applicationId-namespaced with the staging lifecycle
     # (atexit removal + stale-sibling prune), which is exactly the
     # another-session's-delete-must-never-land-mid-upsert invariant this
     # block used to implement by hand (ADVICE r4)
-    db_dir = _scratch(spark, sf_dir, "trips_db")
+    db_dir = scratch_path(spark, sf_dir, "trips_db")
     os.makedirs(db_dir, exist_ok=True)
     db_path = os.path.join(db_dir, "trips.sqlite")
     for suffix in ("", "-wal", "-shm"):

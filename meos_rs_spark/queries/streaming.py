@@ -3,24 +3,37 @@ its incremental upsert + temporal merge (``ais_to_db.rs:156-161``) defines
 the streaming semantics — append new posits to existing trajectories.
 
 Each query here runs a real streaming pipeline to completion
-(``availableNow`` trigger over the events parquet → memory sink) and
+(``availableNow`` trigger over one fixture parquet → memory sink) and
 returns the materialized result, so the driver can hash it like any batch
 query. Tumbling-window and session-window results are oracle-checked
 against their batch SQL equivalents — watermark semantics don't drop
 anything under availableNow with ordered replay, so the stream must equal
 the batch answer exactly.
+
+Every stream runs on a *stream session*: ``spark.newSession()`` (same
+SparkContext, its own SQL conf), prepared like any entry session and
+created with ``spark.sql.shuffle.partitions`` at the state-partition count
+of the file the stream reads. The caller's conf is never touched. A
+memory-sink table lives in the stream session, so a returned frame belongs
+to it and the batch tail after the sink runs at that partition count.
 """
 
 from __future__ import annotations
 
-import uuid
+import os
+import re
+import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import LongType
 
+from meos_rs_spark.functions.staging import scratch_path
 from meos_rs_spark.queries.textanalysis import Q_MAX_TOK, Q_MIN_TOK, Q_MIN_TTR
 from meos_rs_spark.registry import register
+from meos_rs_spark.session import prepare_session
 from meos_rs_spark.sources.tables import declared_schema, load_table
 
 # dropDuplicatesWithinWatermark only guarantees dedup of duplicates whose
@@ -58,24 +71,12 @@ STREAM_EVENTS_CTE = (
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from meos_rs_spark.session import prepare_session
-
-    prepare_session(spark)
-    # Streaming readers need an explicit schema: the declared one, typed from
-    # the footer so both fixture generations work (TIMESTAMP(NANOS) surfacing
-    # as int64 under nanosAsLong, vs timestamp[us] → TIMESTAMP_NTZ).
-    schema = declared_schema(spark, os.path.join(sf_dir, "events.parquet"), "events")
-    # file streams take a directory; glob-filter down to the events parquet
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    raw = _stream_table(spark, sf_dir, "events")
     # watermarks require TIMESTAMP (not NTZ); session TZ is pinned UTC so the
-    # instant equals the NTZ wall-clock the batch loaders produce
-    if isinstance(schema["ts"].dataType, LongType):
+    # instant equals the NTZ wall-clock the batch loaders produce. The
+    # footer-typed schema covers both fixture generations (TIMESTAMP(NANOS)
+    # surfacing as int64 under nanosAsLong, vs timestamp[us] → TIMESTAMP_NTZ).
+    if isinstance(raw.schema["ts"].dataType, LongType):
         instant = F.expr("timestamp_micros(ts div 1000)")
     else:
         instant = F.col("ts").cast("timestamp")
@@ -87,157 +88,89 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sink_name(base: str, sf_dir: str) -> str:
-    """Deterministic memory-sink view name per (call site, fixture dir).
+#: State-store partition bounds for the finite availableNow replays.
+#: Streaming queries ignore AQE, so every stateful operator takes its
+#: session's ``spark.sql.shuffle.partitions`` as its state-store partition
+#: count, and each micro-batch pays per-partition state-store open, commit
+#: and checkpoint IO for KB-scale state. Measured at sf0.1 going from 32 to
+#: 4 partitions: stream_tumbling_counts 5.8 → 1.8 s, stream_interval_join
+#: 10.6 → 3.0 s; on the ×10 growth fixture 4 partitions took 7.8 s, 16 took
+#: 4.1 s and 32 took 5.2 s. So the count tracks the size of the source,
+#: about one partition per MiB, not the core count. Output does not depend
+#: on it: the oracles are the batch answers.
+_STATE_MIN, _STATE_MAX = 4, 200
+
+
+def _state_partitions(spark: SparkSession, source: str) -> int:
+    """State partitions for a stream over ``source``: ceil(MiB) of its
+    bytes, clamped to [4, 200]. One Hadoop ``getContentSummary`` call sizes
+    a plain path, ``file://`` and object-store URIs alike, and counts a
+    directory recursively. It raises when ``source`` cannot be read."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(source)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    mib = -(-fs.getContentSummary(path).getLength() // (1 << 20))
+    return max(_STATE_MIN, min(_STATE_MAX, mib))
+
+
+#: (caller session, state partitions) -> its stream session
+_STREAM_SESSIONS: dict[tuple[SparkSession, int], SparkSession] = {}
+_STREAM_SESSIONS_LOCK = threading.Lock()
+
+
+def _stream_session(spark: SparkSession, source: str) -> SparkSession:
+    """The session a stream over ``source`` runs on: ``spark.newSession()``,
+    prepared, with ``spark.sql.shuffle.partitions`` set once at creation to
+    :func:`_state_partitions`. Memoized per (caller session, partition
+    count), never per call: every session that starts a stream adds one
+    listener bus to the SparkContext for good, and the memory sinks'
+    drop-and-replace bounds their copies only within one session."""
+    n = _state_partitions(spark, source)
+    with _STREAM_SESSIONS_LOCK:
+        session = _STREAM_SESSIONS.get((spark, n))
+        if session is None:
+            session = prepare_session(spark.newSession())
+            session.conf.set("spark.sql.shuffle.partitions", str(n))
+            _STREAM_SESSIONS[spark, n] = session
+    return session
+
+
+def _stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File stream over fixture ``table`` on its stream session, read with
+    the batch loader's declared and footer-checked schema, so a fixture
+    regeneration breaks both readers alike. File streams take a directory;
+    a glob filter narrows it to the table's parquet."""
+    prepare_session(spark)
+    source = os.path.join(sf_dir, f"{table}.parquet")
+    schema = declared_schema(spark, source, table)
+    return (
+        _stream_session(spark, source).readStream.schema(schema)
+        .option("pathGlobFilter", f"{table}.parquet")
+        .parquet(sf_dir)
+    )
+
+
+def _available_now(writer: DataStreamWriter) -> None:
+    """Run a configured stream writer over everything available now."""
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
+def _to_memory(df: DataFrame, base: str, sf_dir: str, mode: str = "complete") -> DataFrame:
+    """Run ``df`` into a memory sink named per (call site, fixture dir) and
+    return the sink's table.
 
     uuid-per-invocation names let every streaming run pin another full
-    result copy in the driver's memory sink for the session lifetime
-    (review find, r7 — the in-memory twin of the uuid-checkpoint leak).
-    A deterministic name is dropped and replaced on re-invocation, so at
-    most one copy per (query, scale) is ever held; keying by sf_dir keeps
-    a handle returned at one scale valid while another scale builds (the
-    cross-scale hazard class of tests/test_cross_scale.py).
-    """
-    import os
-    import re
-
+    result copy in the driver's memory sink for the session lifetime (the
+    in-memory twin of a uuid-checkpoint leak). A deterministic name is
+    dropped and replaced on re-invocation, so at most one copy per (query,
+    scale) is ever held; keying by sf_dir keeps a handle returned at one
+    scale valid while another scale builds (the cross-scale hazard class of
+    tests/test_cross_scale.py)."""
     tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_dir.rstrip("/")))
-    return f"{base}_{tag}"
-
-
-#: State-store partition count for the finite availableNow replays (r16
-#: optimization, guide §2.2 "fewer, larger reduce partitions"): streaming
-#: queries ignore AQE, so every stateful operator inherits the session's
-#: full ``spark.sql.shuffle.partitions`` (32 here) as its state-store
-#: partition count — and each micro-batch then pays 32× state-store
-#: open/commit/checkpoint file IO for KB-scale state (measured:
-#: stream_tumbling_counts 5.8 → 1.8 s min, stream_interval_join 10.6 →
-#: 3.0 s at sf0.1 going 32 → 4). Partition count should track STATE
-#: volume, not core count; conf-overridable for deployments whose state
-#: is genuinely large (the checkpoint pins it per query lifetime, and
-#: every checkpoint here is per-invocation, so the value binds fresh each
-#: run). Output content is partitioning-independent — the oracles are
-#: unchanged.
-STREAM_STATE_PARTITIONS_CONF = "spark.meos.stream.statePartitions"
-_STREAM_STATE_MIN = 4
-_STREAM_STATE_MAX = 200
-
-
-def _backlog_bytes(spark: SparkSession, sf_dir: str) -> int:
-    """Source-backlog size in bytes: the events parquet when present, else
-    the directory's parquet total. Plain local paths read via ``os.*`` (no
-    JVM round-trip); URI paths (s3://, hdfs://, file://) go through the
-    Hadoop FileSystem API so an object-store deployment sizes correctly
-    instead of silently flooring at ``_STREAM_STATE_MIN`` (r16 VERDICT
-    item 2 — the old ``os.path``-only probe read 0 for any non-local
-    fixture location). A local OSError → 0 (the floor applies); a Hadoop
-    FileSystem error raises."""
-    import os
-
-    if "://" not in sf_dir:
-        ev = os.path.join(sf_dir, "events.parquet")
-        try:
-            if os.path.isfile(ev):
-                return os.path.getsize(ev)
-            if os.path.isdir(sf_dir):
-                return sum(
-                    os.path.getsize(os.path.join(sf_dir, f))
-                    for f in os.listdir(sf_dir)
-                    if f.endswith(".parquet")
-                    and os.path.isfile(os.path.join(sf_dir, f))
-                )
-        except OSError:
-            pass
-        return 0
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    ev = Path(sf_dir.rstrip("/") + "/events.parquet")
-    fs = ev.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.isFile(ev):
-        return fs.getFileStatus(ev).getLen()
-    root = Path(sf_dir)
-    if fs.isDirectory(root):
-        return sum(
-            st.getLen()
-            for st in fs.listStatus(root)
-            if st.isFile() and st.getPath().getName().endswith(".parquet")
-        )
-    return 0
-
-
-def _state_partitions(spark: SparkSession, sf_dir: str | None) -> str:
-    """Scale-adaptive default: ~one state partition per MB of the source
-    backlog (``_backlog_bytes`` — storage-agnostic: local paths via os.*,
-    URI paths via the Hadoop FileSystem API), clamped to [4, 200] —
-    measured on the ×10 growth fixture the optimum tracks state volume,
-    not core count (4 parts: 7.8 s, 16: 4.1 s, 32: 5.2 s at ×10 vs 4
-    optimal at ×1). An explicit ``spark.meos.stream.statePartitions``
-    always wins — deployments whose steady-state STATE volume far
-    exceeds the replayed backlog (or dwarfs the 200-partition clamp)
-    should set it rather than rely on the backlog heuristic; with no
-    size hint the floor applies."""
-    explicit = spark.conf.get(STREAM_STATE_PARTITIONS_CONF, None)
-    if explicit is not None:
-        return explicit
-    import math
-
-    size = _backlog_bytes(spark, sf_dir) if sf_dir else 0
-    n = max(_STREAM_STATE_MIN, min(_STREAM_STATE_MAX, math.ceil(size / (1 << 20))))
-    return str(n)
-
-
-class _stream_confs:
-    """Scope ``spark.sql.shuffle.partitions`` down to the stream-state
-    policy for the duration of one availableNow run, restoring the
-    session value afterwards.
-
-    SERIAL-EXECUTION ASSUMPTION (r16 ADVICE): "the batch planner never
-    sees the change" holds because this harness runs queries strictly
-    sequentially on one session — a batch query planned CONCURRENTLY in
-    the same session (or two overlapping streams with different sf_dirs)
-    would be planned with the reduced partition count. A deployment
-    driving streams from multiple threads should scope the override to a
-    cloned session (``spark.newSession()`` shares the context but not the
-    runtime conf) instead of this set/restore on the shared conf."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str | None = None):
-        self._spark = spark
-        self._sf_dir = sf_dir
-
-    def __enter__(self):
-        self._old = self._spark.conf.get("spark.sql.shuffle.partitions", None)
-        self._spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            _state_partitions(self._spark, self._sf_dir),
-        )
-        return self
-
-    def __exit__(self, *exc):
-        if self._old is None:
-            self._spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self._spark.conf.set("spark.sql.shuffle.partitions", self._old)
-        return False
-
-
-def _run_to_memory_sink(
-    df: DataFrame, spark: SparkSession, name: str, output_mode: str = "complete",
-    sf_dir: str | None = None,
-) -> DataFrame:
-    spark.catalog.dropTempView(name)  # replace the previous invocation's copy
-    with _stream_confs(spark, sf_dir):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
-
-
-def _run_to_table(df: DataFrame, spark: SparkSession, base: str, sf_dir: str) -> DataFrame:
-    return _run_to_memory_sink(df, spark, _sink_name(base, sf_dir), sf_dir=sf_dir)
+    name = f"{base}_{tag}"
+    session = df.sparkSession
+    session.catalog.dropTempView(name)
+    _available_now(df.writeStream.format("memory").queryName(name).outputMode(mode))
+    return session.table(name)
 
 
 # --- tumbling window aggregation -------------------------------------------
@@ -267,7 +200,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
     )
-    out = _run_to_table(agg, spark, "stream_tumbling_counts", sf_dir)
+    out = _to_memory(agg, "stream_tumbling_counts", sf_dir)
     return out.select(
         "user_id",
         F.col("win.start").cast("timestamp_ntz").alias("win_start"),
@@ -318,7 +251,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.session_window("ts", _GAP).alias("win"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = _run_to_table(agg, spark, "stream_session_windows", sf_dir)
+    out = _to_memory(agg, "stream_session_windows", sf_dir)
     # session_window carries the observed bounds by construction:
     # win.start == min(ts) and win.end == max(ts) + gap, so subtracting the
     # gap recovers max(ts) exactly — nothing extra needs aggregating
@@ -482,10 +415,7 @@ def stream_stateful_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    latest = _run_to_memory_sink(
-        out, spark, _sink_name("stream_stateful_assembly", sf_dir), "update",
-        sf_dir=sf_dir,
-    )
+    latest = _to_memory(out, "stream_stateful_assembly", sf_dir, "update")
     return _final_state_per_user(latest)
 
 
@@ -531,12 +461,8 @@ def stream_stateful_evicting(spark: SparkSession, sf_dir: str) -> DataFrame:
     meos-polars/examples/ais_to_db.rs:156-161; gap-split assembly,
     meos/examples/04_to_file.rs:92-116."""
     ev = _stream_events(spark, sf_dir)
-    latest = _run_to_memory_sink(
-        evicting_assembly(ev, DEDUP_WATERMARK),
-        spark,
-        _sink_name("stream_stateful_evicting", sf_dir),
-        "update",
-        sf_dir=sf_dir,
+    latest = _to_memory(
+        evicting_assembly(ev, DEDUP_WATERMARK), "stream_stateful_evicting", sf_dir, "update"
     )
     return _final_state_per_user(latest)
 
@@ -577,7 +503,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
     )
-    out = _run_to_table(agg, spark, "stream_sliding_counts", sf_dir)
+    out = _to_memory(agg, "stream_sliding_counts", sf_dir)
     return out.select(
         "user_id",
         F.col("win.start").cast("timestamp_ntz").alias("win_start"),
@@ -615,7 +541,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
-    out = _run_to_table(deduped, spark, "stream_dedup_watermark", sf_dir)
+    out = _to_memory(deduped, "stream_dedup_watermark", sf_dir)
     return out.select("user_id", "n_unique")
 
 
@@ -635,39 +561,20 @@ FROM stream_events GROUP BY user_id
     "store read back after availableNow completion",
 )
 def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    # checkpoints AND the parquet store live under the app-namespaced dir
-    # with the staging lifecycle (atexit removal + stale-sibling prune): a
-    # store keyed only by the fixture tag was shared across concurrent
-    # sessions — one session's reset rmtree raced another's appends — and
-    # leaked past exit (review find, r7; same class as the checkpoint leak)
-    from meos_rs_spark.functions.staging import adopt_app_dir
-
-    ckpt_root = os.path.join(tempfile.gettempdir(), "meos_rs_spark_ckpt")
-    app_dir = os.path.join(ckpt_root, spark.sparkContext.applicationId)
-    adopt_app_dir(app_dir, ckpt_root)
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    store = os.path.join(app_dir, f"stream_store_{tag}")
-    # reset the store for a deterministic result on every invocation
-    shutil.rmtree(store, ignore_errors=True)
+    # the store and its checkpoint live in the per-application scratch dir
+    # (scratch_path): a store keyed only by the fixture tag was shared across
+    # concurrent sessions, so one session's reset raced another's appends
+    base = scratch_path(spark, sf_dir, "stream_foreachbatch")
+    store, ckpt = os.path.join(base, "store"), os.path.join(base, "ckpt")
+    # reset store and checkpoint for a deterministic result on every call
+    shutil.rmtree(base, ignore_errors=True)
 
     def write_batch(batch_df, batch_id):
         batch_df.write.mode("append").parquet(store)
 
     ev = _stream_events(spark, sf_dir)
-    with _stream_confs(spark, sf_dir):
-        q = (
-            ev.writeStream.foreachBatch(write_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(app_dir, uuid.uuid4().hex[:8]))
-            .start()
-        )
-        q.awaitTermination()
-    back = spark.read.parquet(store)
+    _available_now(ev.writeStream.foreachBatch(write_batch).option("checkpointLocation", ckpt))
+    back = ev.sparkSession.read.parquet(store)
     return back.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
@@ -719,38 +626,10 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_user").alias("user_id"),
         (F.expr("unix_micros(b_ts)") - F.expr("unix_micros(v_ts)")).alias("dt_us"),
     )
-    name = _sink_name("stream_interval_join", sf_dir)
-    spark.catalog.dropTempView(name)
-    with _stream_confs(spark, sf_dir):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _to_memory(joined, "stream_interval_join", sf_dir, "append")
 
 
 # --- streaming corpus curation (LLM-ops × streaming) ------------------------
-
-def _stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream over the documents fixture, read with the same declared
-    and footer-checked schema as the batch loader, so a fixture regeneration
-    breaks both readers alike."""
-    import os
-
-    from meos_rs_spark.session import prepare_session
-
-    prepare_session(spark)
-    schema = declared_schema(spark, os.path.join(sf_dir, "documents.parquet"), "documents")
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
 
 @register(
     "stream_doc_curation",
@@ -778,7 +657,7 @@ GROUP BY lang, source
     "state, so the pipeline runs indefinitely at ingest scale",
 )
 def stream_doc_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = _stream_documents(spark, sf_dir)
+    raw = _stream_table(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
     ttr = F.size(F.array_distinct(toks)).cast("double") / n
@@ -793,7 +672,7 @@ def stream_doc_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs_pass"),
         F.sum("n_tokens").alias("total_tokens"),
     )
-    return _run_to_table(agg, spark, "stream_doc_curation", sf_dir)
+    return _to_memory(agg, "stream_doc_curation", sf_dir)
 
 
 # --- streaming content-fingerprint dedup (dedup family x streaming) ---------
@@ -823,7 +702,7 @@ FROM norm
     "İ and Greek final sigma (pinned in tests/test_determinism.py).",
 )
 def stream_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = _stream_documents(spark, sf_dir)
+    raw = _stream_table(spark, sf_dir, "documents")
     nt = F.trim(F.regexp_replace(F.lower("text"), " +", " "))
     # synthesized deterministic event time (documents carry none): doc_id
     # seconds past a fixed epoch — the watermark column the state store
@@ -841,7 +720,7 @@ def stream_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_unique"),
         F.sum(F.length("nt")).alias("total_norm_chars"),
     )
-    return _run_to_table(agg, spark, "stream_fingerprint_dedup", sf_dir)
+    return _to_memory(agg, "stream_fingerprint_dedup", sf_dir)
 
 
 # --- restart recovery: the long-lived deployment shape, driver-verifiable ---
@@ -880,20 +759,8 @@ FROM events GROUP BY user_id
 )
 def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
-    import os
-    import shutil
-    import tempfile
 
-    from meos_rs_spark.functions.staging import adopt_app_dir
-    from meos_rs_spark.session import prepare_session
-
-    prepare_session(spark)
-    ckpt_root = os.path.join(tempfile.gettempdir(), "meos_rs_spark_ckpt")
-    app_dir = os.path.join(ckpt_root, spark.sparkContext.applicationId)
-    adopt_app_dir(app_dir, ckpt_root)
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = os.path.join(app_dir, f"restart_recovery_{tag}")
+    base = scratch_path(spark, sf_dir, "restart_recovery")
     src, store, ckpt = (os.path.join(base, d) for d in ("src", "store", "ckpt"))
     # full reset per invocation: the SHARED checkpoint is the point of the
     # query, so it must never survive into the next invocation
@@ -903,7 +770,7 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.col("value").cast("double").alias("value")
     )
-    schema = ev.schema
+    stream = _stream_session(spark, os.path.join(sf_dir, "events.parquet"))
 
     def _arrive(part: int) -> None:
         """Deterministic arrival: events with event_id % 2 == part land as
@@ -921,7 +788,7 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _run_once() -> None:
         agg = (
-            spark.readStream.schema(schema)
+            stream.readStream.schema(ev.schema)
             .parquet(src)
             .groupBy("user_id")
             .agg(
@@ -931,15 +798,11 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("sum_value"),
             )
         )
-        with _stream_confs(spark, sf_dir):
-            q = (
-                agg.writeStream.foreachBatch(_overwrite)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _available_now(
+            agg.writeStream.foreachBatch(_overwrite)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+        )
 
     _arrive(0)
     _run_once()  # run 1: arrival 0 only; store = agg(arrival 0)
@@ -953,4 +816,4 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             "restart with no new data re-emitted: the no-op run rewrote the "
             f"sink ({sorted(set(after) ^ set(before)) or 'same files, new mtimes'})"
         )
-    return spark.read.parquet(store).select("user_id", "n_events", "sum_value")
+    return stream.read.parquet(store).select("user_id", "n_events", "sum_value")

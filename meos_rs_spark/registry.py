@@ -82,52 +82,15 @@ def register(
 
 DRIVER_WINDOW = 50
 
-#: Queries whose SEMANTICS changed since their latest green driver row —
-#: hand-listed per round, slotted right after the never-checked backlog so
-#: the changed code re-earns its row this round instead of waiting for the
-#: oldest-green rotation to reach it (r5 ADVICE: new code benefits most
-#: from a driver row). Clear entries once the round's artifact lands.
-#: r15: all 28 r14 entries (9 tranche-2a XY swaps + 19 tranche-2b
-#: value-envelope swaps) re-earned green driver rows in the r14 window
-#: (CORRECTNESS_r14.json, 50/50 green) and were cleared.
-#:
-#: r15 oracle-alignment swap (staged in PREFLIGHT_r14, executed this
-#: round): the three posit CTEs route extraction through DuckDB's
-#: tolerant ``TRY_CAST(props AS JSON)`` so a malformed document NULLs in
-#: both engines instead of aborting the oracle leg (the Spark leg is
-#: untouched; output identical on every fixture — two-leg preflight over
-#: all 207 at sf0.01 re-run on the new text). 67 oracles change text (65
-#: posit-CTE consumers + the two scalar raw sites found in the r15
-#: review); the 46 whose latest driver row predates r14 are forced below,
-#: and the 21 checked in the r14 window itself (identical behavior,
-#: freshest rows) ride the normal oldest-green rotation — 67 > the 50-row
-#: window, so full same-round coverage is impossible by construction and
-#: recency is the fairest tiebreak.
-#: r16: all 46 r15 entries (44 posit-CTE TRY_CAST oracle swaps + the two
-#: scalar raw sites from the r15 self-review) re-earned green driver rows
-#: in the r15 window (CORRECTNESS_r15.json, 50/50 green) and were cleared.
-#: The 21 changed-oracle queries whose latest row is r14 (old text) ride
-#: the normal oldest-green rotation per the r15 verdict.
-#:
-#: r16 event-time ingest horizon (r15 VERDICT item 3): the 8 event-time
-#: streaming twins gained the shared sanity-horizon gate in BOTH legs
-#: (queries/streaming.py STREAM_EVENTS_CTE + _stream_events filter) —
-#: semantics changed (corrupt out-of-horizon event-times now drop
-#: symmetrically instead of aborting the Pandas-worker stage or
-#: catapulting the watermark), so each re-earns a driver row this round.
-#: stream_restart_recovery is NOT here: it carries no event-time column.
-#:
-#: r17: all 9 r16 entries (the 8 event-time streaming twins with the shared
-#: ingest sanity-horizon gate + traj_convex_hull's regenerated fsum golden)
-#: re-earned green driver rows in the r16 window (CORRECTNESS_r16.json,
-#: 50/50 green) and were cleared. r17 is an optimization round: no query's
-#: declared semantics change, so nothing is forced — the window is pure
-#: oldest-green rotation (r10/r11/r12 rows).
-#:
-#: r18: the r17 window landed 50/50 green (CORRECTNESS_r17.json). Since
-#: r17 nothing has changed query semantics (only perfbench/, BENCHMARK.json
-#: and documents were added), so nothing is forced — the window is pure
-#: oldest-green rotation (r12/r13/r14 rows).
+#: Queries whose SEMANTICS changed since their latest green driver row,
+#: slotted right after the never-checked backlog so the changed code
+#: re-earns its row this round instead of waiting for the oldest-green
+#: rotation to reach it. The rule: a change to a query's output or to its
+#: oracle text (beyond whitespace) adds the query here; a refactor that
+#: keeps every oracle hash adds nothing. Clear an entry once a CORRECTNESS
+#: artifact shows it green under the new code. When more queries change
+#: than fit the 50-row window, force those whose latest row is oldest and
+#: let the rest ride the rotation.
 FORCE_VERIFY: tuple[str, ...] = ()
 
 

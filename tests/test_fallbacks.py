@@ -1,12 +1,12 @@
 """Narrow fallbacks: ``prepare_session`` swallows only a Spark refusal of
-an optional conf, and ``_backlog_bytes`` swallows nothing on a URI path."""
+an optional conf, and ``_state_partitions`` swallows nothing."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.errors import PySparkAttributeError, PySparkException
 
-from meos_rs_spark.queries.streaming import _backlog_bytes
+from meos_rs_spark.queries.streaming import _state_partitions
 from meos_rs_spark.session import RUNTIME_CONFS, prepare_session
 
 _OPTIONAL = "spark.sql.adaptive.enabled"
@@ -55,12 +55,12 @@ class _ConnectSession:
         )
 
 
-def test_backlog_bytes_raises_without_a_jvm():
+def test_state_partitions_raise_without_a_jvm():
     """A session with no JVM handle (Spark Connect, which the package does
-    not support) must not size the backlog as 0 and floor the state
+    not support) must not size the source as 0 and floor the state
     partitions silently."""
     with pytest.raises(PySparkAttributeError):
-        _backlog_bytes(_ConnectSession(), "s3://bucket/fixture")
+        _state_partitions(_ConnectSession(), "s3://bucket/fixture/events.parquet")
 
 
 class _BrokenFileSystemSession:
@@ -84,6 +84,7 @@ class _BrokenFileSystemSession:
                                 raise OSError(f"no FileSystem for {self.p}")
 
 
-def test_backlog_bytes_raises_a_file_system_error():
-    with pytest.raises(OSError, match="no FileSystem for s3://bucket/fixture"):
-        _backlog_bytes(_BrokenFileSystemSession(), "s3://bucket/fixture")
+def test_state_partitions_raise_a_file_system_error():
+    src = "s3://bucket/fixture/events.parquet"
+    with pytest.raises(OSError, match=f"no FileSystem for {src}"):
+        _state_partitions(_BrokenFileSystemSession(), src)

@@ -321,13 +321,14 @@ def test_ewma_bounded_by_track_envelope(spark):
 
 
 def test_compaction_collapses_files(spark):
-    from meos_rs_spark.queries.sources_sinks import _part_files, _scratch
+    from meos_rs_spark.functions.staging import scratch_path
+    from meos_rs_spark.queries.sources_sinks import _part_files
 
     # run the sink, then audit the layout it left behind
     n_rows = _q(spark, "snk_compaction").count()
     assert n_rows > 0
-    n_in = len(_part_files(spark, _scratch(spark, SF_SMOKE, "events_fragmented")))
-    n_out = len(_part_files(spark, _scratch(spark, SF_SMOKE, "events_compacted")))
+    n_in = len(_part_files(spark, scratch_path(spark, SF_SMOKE, "events_fragmented")))
+    n_out = len(_part_files(spark, scratch_path(spark, SF_SMOKE, "events_compacted")))
     assert n_in == 64
     assert 1 <= n_out < n_in
 

@@ -546,6 +546,42 @@ def test_source_vecs_envelope_drops_null_component(tmp_path):
     assert ids.tolist() == [1]
 
 
+def _write_raw(tmp_path, ids, embs):
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(embs, pa.list_(pa.float32())),
+            }
+        ),
+        path,
+    )
+    return path
+
+
+def test_source_vecs_raise_on_an_empty_quantizer(tmp_path):
+    """Head rows that are all off the envelope (a NULL vector, a NaN
+    component) leave no centroid: loading the side names the source and k
+    instead of letting numpy's argmin fail on an empty sequence."""
+    dim = 4
+    path = _write_raw(tmp_path, [0, 1, 2], [None, [float("nan")] + [1.0] * 3, [1.0] * dim])
+    with pytest.raises(ValueError, match=f"{path}: no row with vec_id < 2"):
+        quantize._load_source_vecs(path, 2, dim)
+    udf = quantize.make_nearest_centroid_udf((path, 2, dim), metric="l2")
+    with pytest.raises(ValueError, match="empty quantizer"):
+        udf.func(pd.Series([np.ones(dim, np.float32)]))
+
+
+def test_source_vecs_raise_on_a_duplicate_head_id(tmp_path):
+    """vec_id is the corpus key: a head id read twice would load as two
+    centroids."""
+    dim = 4
+    path = _write_raw(tmp_path, [0, 0, 1], [[1.0] * dim, [2.0] * dim, [3.0] * dim])
+    with pytest.raises(ValueError, match=f"{path}: vec_id repeats among the rows with vec_id < 2"):
+        quantize._load_source_vecs(path, 2, dim)
+
+
 _KERNELS = {
     "nearest_l2": lambda s: quantize.make_nearest_centroid_udf(s, metric="l2"),
     "nearest_cos": lambda s: quantize.make_nearest_centroid_udf(s, metric="cos"),

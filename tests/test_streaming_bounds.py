@@ -2,13 +2,21 @@
 watermark delay exceeds the fixture's whole event-time span (duplicates can
 then never age out of dedup state, whatever the micro-batching). Pin that
 precondition here so a fixture regeneration that widens the span fails loudly
-instead of silently breaking the streaming parity hash."""
+instead of silently breaking the streaming parity hash.
+
+The streams' runtime bounds are pinned here too: the state-partition count
+each stream session is created with, and that streams leave the caller's
+session conf alone."""
 
 from __future__ import annotations
 
-import duckdb
+import os
 
-from meos_rs_spark.queries.streaming import DEDUP_WATERMARK
+import duckdb
+import pytest
+
+from meos_rs_spark.queries.streaming import DEDUP_WATERMARK, _state_partitions
+from tests.conftest import SF_SMOKE
 
 SF_DIRS = [f"/root/testdata/sf{sf}" for sf in ("0.001", "0.01", "0.1")]
 
@@ -24,58 +32,70 @@ def test_watermark_covers_event_span():
         assert span_days < delay_days, (sf_dir, span_days, delay_days)
 
 
-def test_stream_state_partitions_policy(spark):
-    """The scale-adaptive state-partition default: explicit conf wins;
-    otherwise ~1 partition/MB of the events parquet, clamped to [4, 200]."""
-    import os
-    import tempfile
+def _sized(path: str, n_bytes: int) -> None:
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as f:
+        f.truncate(n_bytes)
 
+
+def test_stream_state_partitions_policy(spark, tmp_path):
+    """~1 state partition per MiB of the stream's source file, clamped to
+    [4, 200]."""
+    assert _state_partitions(spark, os.path.join(SF_DIRS[2], "events.parquet")) == 4  # 2 MB
+    src = str(tmp_path / "events.parquet")
+    _sized(src, 20 << 20)
+    assert _state_partitions(spark, src) == 20
+    _sized(src, 1 << 30)
+    assert _state_partitions(spark, src) == 200
+
+
+def test_stream_state_partitions_uri_matches_local(spark, tmp_path):
+    """A URI-form source gets the same count as the plain local path (an
+    os.path-only probe read 0 bytes for any URI and floored at 4). file://
+    goes through the same Hadoop FileSystem call an s3a:// or hdfs://
+    deployment takes. A directory source is sized recursively, so a
+    partitioned (nested) layout counts every file."""
+    src = str(tmp_path / "events.parquet")
+    _sized(src, 20 << 20)
+    assert _state_partitions(spark, src) == 20
+    assert _state_partitions(spark, "file://" + src) == 20
+    nested = tmp_path / "nested.parquet"
+    _sized(str(nested / "day=1" / "part-0.parquet"), 15 << 20)
+    _sized(str(nested / "day=2" / "hour=3" / "part-0.parquet"), 10 << 20)
+    assert _state_partitions(spark, str(nested)) == 25
+    assert _state_partitions(spark, "file://" + str(nested)) == 25
+
+
+@pytest.mark.parametrize("preset", ["13", None], ids=["set", "unset"])
+def test_streams_share_one_stream_session(spark, preset):
+    """Streams run on one memoized stream session sized by
+    ``_state_partitions``; the caller's shuffle-partition count is never
+    touched, whether it was set explicitly or left unset."""
     from meos_rs_spark.queries.streaming import (
-        STREAM_STATE_PARTITIONS_CONF,
-        _state_partitions,
+        stream_stateful_assembly,
+        stream_tumbling_counts,
     )
 
-    assert _state_partitions(spark, "/root/testdata/sf0.1") == "4"  # 2 MB -> floor
-    with tempfile.TemporaryDirectory() as d:
-        with open(os.path.join(d, "events.parquet"), "wb") as f:
-            f.truncate(20 << 20)  # 20 MB backlog -> 20 partitions
-        assert _state_partitions(spark, d) == "20"
-        with open(os.path.join(d, "events.parquet"), "wb") as f:
-            f.truncate(1 << 30)  # 1 GB -> cap
-        assert _state_partitions(spark, d) == "200"
-    assert _state_partitions(spark, None) == "4"
-    spark.conf.set(STREAM_STATE_PARTITIONS_CONF, "7")
+    key = "spark.sql.shuffle.partitions"
+    caller_conf = spark._jsparkSession.sessionState().conf()
+    original = spark.conf.get(key)
+    if preset is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, preset)
+    before = spark.conf.get(key)
     try:
-        assert _state_partitions(spark, "/root/testdata/sf0.1") == "7"
+        frames = [
+            fn(spark, SF_SMOKE)
+            for fn in (stream_tumbling_counts, stream_stateful_assembly) * 2
+        ]
+        assert spark.conf.get(key) == before
+        assert caller_conf.contains(key) == (preset is not None)
     finally:
-        spark.conf.unset(STREAM_STATE_PARTITIONS_CONF)
-
-
-def test_stream_state_partitions_uri_matches_local(spark):
-    """Storage-agnostic sizing (r16 VERDICT item 4): a URI-form fixture
-    location must produce the SAME state-partition count as the plain
-    local path — the old os.path-only probe read 0 bytes for any URI and
-    silently floored at 4. file:// exercises the Hadoop FileSystem branch
-    end-to-end (same code path an s3a:// or hdfs:// deployment takes);
-    both the single-events-parquet and the dir-total fallback policies
-    are covered."""
-    import os
-    import tempfile
-
-    from meos_rs_spark.queries.streaming import _backlog_bytes, _state_partitions
-
-    with tempfile.TemporaryDirectory() as d:
-        with open(os.path.join(d, "events.parquet"), "wb") as f:
-            f.truncate(20 << 20)  # 20 MB backlog -> 20 partitions
-        assert _state_partitions(spark, d) == "20"
-        assert _state_partitions(spark, "file://" + d) == "20"
-        assert _backlog_bytes(spark, "file://" + d) == (20 << 20)
-        # dir-total fallback (no events.parquet): both schemes agree too
-        os.rename(os.path.join(d, "events.parquet"), os.path.join(d, "a.parquet"))
-        with open(os.path.join(d, "b.parquet"), "wb") as f:
-            f.truncate(5 << 20)
-        assert _backlog_bytes(spark, d) == (25 << 20)
-        assert _backlog_bytes(spark, "file://" + d) == (25 << 20)
-        assert _state_partitions(spark, "file://" + d) == "25"
-    # an unreadable URI (no such bucket/scheme reachable) floors, not raises
-    assert _state_partitions(spark, "file:///nonexistent_meos_r17") == "4"
+        spark.conf.set(key, original)
+    session = frames[0].sparkSession
+    assert session is not spark
+    assert all(df.sparkSession is session for df in frames)
+    n = _state_partitions(spark, os.path.join(SF_SMOKE, "events.parquet"))
+    assert session.conf.get(key) == str(n)
+    assert all(df.count() > 0 for df in frames)
